@@ -15,11 +15,10 @@ DataFrame and Catalyst prunes whichever columns a query doesn't touch.
 
 from __future__ import annotations
 
-import os
-import stat as _stat
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import artifacts
 
 TABLES = [
     "region",
@@ -34,52 +33,22 @@ TABLES = [
     "embeddings",
 ]
 
-# Lazy-relation cache (r11, guide §7.3 driver-side work): every
+# Lazy-relation reuse (r11, guide §7.3 driver-side work): every
 # `spark.read.parquet` call costs ~130-175 ms of driver work PLUS one
 # Spark job (parquet footer/schema inference) — measured on this box —
 # and queries construct 1-4 table reads per invocation, so re-reading
 # per call was the single largest driver-side cost in the bench. The
-# cache holds the LAZY DataFrame (a plan node, the catalog/metastore
-# analogue): every action still recomputes from the parquet files.
-# Keyed by (applicationId, path, file fingerprint): a restarted session
-# or an in-place regenerated table (mtime/size change, incl. of a
-# Spark-written directory's entries) misses and re-reads.
-_TABLE_CACHE: dict[tuple, tuple] = {}
-
-
-def _path_fingerprint(path: str) -> tuple:
-    st = os.stat(path)
-    if _stat.S_ISDIR(st.st_mode):
-        kids = tuple(
-            sorted(
-                (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                for e in os.scandir(path)
-            )
-        )
-        return (st.st_mtime_ns, kids)
-    return (st.st_mtime_ns, st.st_size)
-
-
+# artifact store holds the LAZY DataFrame (a plan node, the
+# catalog/metastore analogue): every action still recomputes from the
+# parquet files. A restarted session or an in-place regenerated table
+# misses and re-reads (artifacts.py).
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        key = (spark.sparkContext.applicationId, path)
-        fp = _path_fingerprint(path)
-    except Exception:
-        # unreadable path / stopped context: let the reader raise (or
-        # succeed) exactly as before, uncached
+    def build() -> DataFrame:
         if name == "events":
             return _events_table(spark, sf_dir)
-        return spark.read.parquet(path)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    if name == "events":
-        df = _events_table(spark, sf_dir)
-    else:
-        df = spark.read.parquet(path)
-    _TABLE_CACHE[key] = (fp, df)
-    return df
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+    return artifacts.lookup(spark, sf_dir, "catalog.table", (name,), build)
 
 
 def _events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,10 +70,6 @@ def _events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     elif ts_type == "timestamp_ntz":
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
 
 
 def corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -57,12 +57,6 @@ def punct_ratio(text_col: Column) -> Column:
     return F.when(n > 0, (n - F.length(stripped)).cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
-def mean_word_length(text_col: Column) -> Column:
-    toks = tokens(text_col)
-    total = F.aggregate(toks, F.lit(0.0), lambda a, t: a + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def quality_score(text_col: Column) -> Column:
     """Composite [0,1] quality heuristic: rewards document length in a
     sane band, stopword presence, low punctuation noise."""

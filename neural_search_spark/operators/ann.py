@@ -266,28 +266,6 @@ def _srp_planes(dim: int, n_planes: int, seed: str = "srp") -> list[list[float]]
     return planes
 
 
-def srp_bucket(
-    embs: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Sign-random-projection bucket id per vector → (id, bucket).
-
-    bucket = bit string of sign(v·plane_p); cosine-similar vectors land
-    in the same bucket with probability (1 − θ/π)^n_planes.
-    """
-    v = as_double(F.col(vec_col))
-    bits = ", ".join(
-        f"CASE WHEN {_srp_dot_sql('__v', plane)} >= 0.0D THEN '1' ELSE '0' END"
-        for plane in _srp_planes(dim, n_planes)
-    )
-    return embs.select(F.col(id_col), v.alias("__v")).select(
-        F.col(id_col), F.expr(f"concat({bits})").alias("bucket")
-    )
-
-
 def lsh_bucketed_neardup(
     embs: DataFrame,
     dim: int,

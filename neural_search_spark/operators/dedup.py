@@ -49,6 +49,8 @@ def unit_vectors(embs: DataFrame, id_col: str = "vec_id", vec_col: str = "embedd
 
 NUM_MINHASHES = 16
 BAND_SIZE = 2  # 8 bands of 2 → catches jaccard ≳ 0.5 with high prob.
+# edge budget of connected_components' in-driver union-find (0 disables it)
+CC_LOCAL_MAX_EDGES = 1_000_000
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -373,42 +375,6 @@ def near_dup_survivors(
         ).select(id_col, "survivor_id")
     )
     return rep_surv.unionByName(mem_surv)
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact all-pairs n-gram Jaccard via inverted-index self-join.
-
-    Only docs sharing ≥1 shingle ever meet in the join; with a shingle
-    df-cap this is the scalable exact method (here uncapped — the
-    verifier for the LSH path).
-    """
-    sh = shingle_sets(docs, n, id_col, text_col)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    sa = sh.select(F.col(id_col).alias("a"), F.col("shingle"))
-    sb = sh.select(F.col(id_col).alias("b"), F.col("shingle"))
-    inter = (
-        sa.join(sb, ["shingle"])
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sz_a")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("sz_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
 
 
 def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -966,21 +932,17 @@ def connected_components(
     node with the min id reachable in its component, the fixpoint the
     propagation loop converges to (equality pinned in
     tests/test_r11_optimizations.py on chains, stars, random graphs and
-    the corpus fixture). The threshold is bytes-bounded driver work
-    (~16 B/edge; 1M edges ≈ 16 MB) and env-tunable
-    (SPARK_GRAFT_CC_LOCAL_MAX_EDGES), NOT tuned to local[32] — it is
-    the broadcast-join-style small-side cutoff.
+    the corpus fixture). The threshold bounds driver work by edge
+    count, NOT tuned to local[32] — it is the broadcast-join-style
+    small-side cutoff.
     """
-    import os as _os
-
-    max_local = int(_os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "1000000"))
-    if max_local > 0:
+    if CC_LOCAL_MAX_EDGES > 0:
         probe = (
             pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-            .limit(max_local + 1)
+            .limit(CC_LOCAL_MAX_EDGES + 1)
             .collect()
         )
-        if len(probe) <= max_local:
+        if len(probe) <= CC_LOCAL_MAX_EDGES:
             return _cc_local(pairs, probe, a_col)
     # symmetrize in ONE pass over pairs (a union of two selects would
     # run the upstream pair pipeline twice)
@@ -1154,27 +1116,6 @@ def connected_components_star(
     sym = _sym(edges)
     return sym.groupBy(F.col("u").alias("node")).agg(
         F.least(F.min("v"), F.first("u")).alias("component")
-    )
-
-
-def dedup_cluster_assignment(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """End-to-end fuzzy-dedup pipeline: MinHash→LSH→verify→connected
-    components. Returns (doc_id, canonical_id, cluster_size) for every
-    doc in a near-dup cluster of size ≥ 2; canonical = min doc id in
-    the cluster (the survivor a filtering pass would keep)."""
-    prs = minhash_lsh_dedup(docs, n, threshold, id_col, text_col)
-    cc = connected_components(prs)
-    sizes = cc.groupBy("component").agg(F.count("*").alias("cluster_size"))
-    return cc.join(sizes, "component").select(
-        F.col("node").alias(id_col),
-        F.col("component").alias("canonical_id"),
-        "cluster_size",
     )
 
 

@@ -249,10 +249,6 @@ def synth_png_dims(doc_id: int) -> tuple[int, int]:
     return 4 + doc_id % 13, 3 + doc_id % 7
 
 
-def synth_pixel(doc_id: int, i: int) -> int:
-    return (doc_id * 7 + i * 3) % 256
-
-
 def _synth_pixels(doc_id: int) -> np.ndarray:
     w, h = synth_png_dims(doc_id)
     i = np.arange(w * h, dtype=np.int64)

@@ -37,7 +37,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import as_double, cosine, lit_vector
@@ -45,16 +45,6 @@ from ..functions.vector import as_double, cosine, lit_vector
 DEFAULT_M = 8
 DEFAULT_K = 16
 ADC_SCALE = 1_000_000  # 1e-6 distance resolution in the integer LUT
-
-
-def _sq_l2(a: Column, b_lit: list[float]) -> Column:
-    """Sequential-fold squared L2 — identical op order to an explicit
-    `0 + t1 + t2 + …` SQL chain, so doubles match bit-for-bit."""
-    return F.aggregate(
-        F.zip_with(a, lit_vector(b_lit), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _sq_l2_py(a: list[float], b: list[float]) -> float:

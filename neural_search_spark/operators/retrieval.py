@@ -20,7 +20,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from ..functions import sparse as S
 
 DEFAULT_K = 10  # reference default: query/NeuralQueryBuilder.java:137
 
@@ -174,21 +173,6 @@ def sparse_topk_postings(
         .groupBy(id_col)
         .agg(F.sum(F.col("weight") * F.col("qw")).alias("score"))
     )
-    return _topk(scored, k, id_col=id_col)
-
-
-def sparse_topk_map(
-    corpus: DataFrame,
-    query_tokens: dict[str, float],
-    k: int = DEFAULT_K,
-    sparse_col: str = "sparse",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """R3 over map-form storage: map_zip_with intersection sum."""
-    q = S.lit_token_map(query_tokens)
-    scored = corpus.select(
-        F.col(id_col), S.sparse_dot_map(q, F.col(sparse_col)).alias("score")
-    ).where(F.col("score") > 0)
     return _topk(scored, k, id_col=id_col)
 
 

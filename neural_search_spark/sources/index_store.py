@@ -3,9 +3,9 @@ them into an Engine — "index once, query many".
 
 The reference's index IS its on-disk artifact set (Lucene segments +
 the k-NN graph + SEISMIC postings, rebuilt by `S5` segment merges); in
-this engine the analogous artifacts are DataFrame-shaped and live in
-registry/Engine caches. This module gives them the missing durability
-half of the lifecycle:
+this engine the analogous artifacts are DataFrame-shaped and are reused
+in-process through the artifact store (artifacts.py). This module gives
+them the missing durability half of the lifecycle:
 
 - **save_index**: one pass over the corpus builds and writes
     postings/        (doc_id, token, tf)   — repartitioned BY TOKEN and
@@ -28,13 +28,17 @@ half of the lifecycle:
 
 At 100 TB the save runs as the ingest job on the cluster; every query
 session afterwards pays zero index-build cost — exactly the
-ingest/query split the registry caches simulate in-process.
+ingest/query split the artifact store simulates in-process.
+
+Every artifact written under a corpus's `store_root` — the bundle, the
+scratch artifacts, the model corpora — goes through `load_or_build`.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -290,6 +294,44 @@ def store_root(sf_dir: str, fmt: str = "v1") -> str:
     )
 
 
+def load_or_build(root: str, meta_name: str, current, write, load):
+    """The store's one build path: `load(root)` when `root/meta_name`
+    exists and `current(meta)` accepts its parsed content; otherwise
+    drop the stale root, `write(tmp)` the artifact (meta file included)
+    into a process-private dir, publish it at `root`, and load it.
+
+    Publishing is one rename. Concurrent first-builders race on it: the
+    loser finds `root` complete (meta file present) and discards its
+    build. When `root` exists WITHOUT the meta file it holds only
+    sibling artifacts (the bundle's root also holds scratch artifacts
+    such as minhash_sigs/), so the build is merged entry by entry, meta
+    file LAST, and a concurrent loader only ever sees a complete
+    artifact; entries are deterministic from the corpus, so on a
+    per-entry race the first writer's copy is kept."""
+    meta_path = os.path.join(root, meta_name)
+    if os.path.exists(meta_path):
+        with open(meta_path) as f:
+            if current(json.load(f)):
+                return load(root)
+        shutil.rmtree(root, ignore_errors=True)
+    tmp = f"{root}.build-{os.getpid()}"
+    write(tmp)
+    os.makedirs(os.path.dirname(root), exist_ok=True)
+    try:
+        os.rename(tmp, root)
+    except OSError:
+        if not os.path.exists(meta_path):
+            for entry in sorted(os.listdir(tmp), key=lambda e: e == meta_name):
+                dst = os.path.join(root, entry)
+                if not os.path.exists(dst):
+                    try:
+                        os.rename(os.path.join(tmp, entry), dst)
+                    except OSError:
+                        pass
+        shutil.rmtree(tmp, ignore_errors=True)
+    return load(root)
+
+
 def load_or_build_artifact(
     spark: SparkSession,
     sf_dir: str,
@@ -300,8 +342,7 @@ def load_or_build_artifact(
 ) -> DataFrame:
     """Write-once parquet scratch artifact under the shared warehouse
     root: load when the persisted cache `key` matches, else build via
-    `build_fn()` and persist atomically (tmp dir + rename; a concurrent
-    loser discards its build and loads the winner's). Any store failure
+    `build_fn()` and persist through `load_or_build`. Any store failure
     falls back to the persisted in-process build — correctness is
     unchanged, only the ingest/query split is lost.
 
@@ -312,27 +353,20 @@ def load_or_build_artifact(
     subtrees — so expensive shared frames become ingest-time artifacts
     that every later query scans as cheap columnar parquet, cold
     processes included."""
-    import shutil
 
-    root = os.path.join(store_root(sf_dir), *name.split("/"))
-    meta_path = os.path.join(root, meta_name)
-    try:
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                if json.load(f) == key:
-                    return spark.read.parquet(root)
-            shutil.rmtree(root, ignore_errors=True)
-        df = build_fn()
-        tmp = f"{root}.build-{os.getpid()}"
-        df.write.mode("overwrite").parquet(tmp)
+    def write(tmp: str) -> None:
+        build_fn().write.mode("overwrite").parquet(tmp)
         with open(os.path.join(tmp, meta_name), "w") as f:
             json.dump(key, f)
-        os.makedirs(os.path.dirname(root), exist_ok=True)
-        try:
-            os.rename(tmp, root)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        return spark.read.parquet(root)
+
+    try:
+        return load_or_build(
+            os.path.join(store_root(sf_dir), *name.split("/")),
+            meta_name,
+            lambda meta: meta == key,
+            write,
+            spark.read.parquet,
+        )
     except Exception:
         # store unavailable (read-only fs, partial write…): keep the
         # old once-per-process bound via persist instead of the disk

@@ -12,6 +12,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from neural_search_spark import artifacts
 from neural_search_spark import registry as R
 
 
@@ -70,14 +71,14 @@ def test_staleness_guard_rebuilds(spark, tmp_path):
     docs.write.mode("overwrite").parquet(str(fake / "documents.parquet"))
     root = _store_root(str(fake))
     shutil.rmtree(root, ignore_errors=True)
-    R._BUNDLE_CACHE.pop(str(fake), None)
+    artifacts.clear(str(fake))
     # first build: 100 docs
     b1 = R._artifact_bundle(spark, str(fake))
     assert b1 is not None and b1.stats[0] == 100
     # regenerate the corpus with MORE docs, clear the in-process cache
     docs2 = spark.read.parquet(os.path.join(sf_small, "documents.parquet"))
     docs2.write.mode("overwrite").parquet(str(fake / "documents.parquet"))
-    R._BUNDLE_CACHE.pop(str(fake), None)
+    artifacts.clear(str(fake))
     b2 = R._artifact_bundle(spark, str(fake))
     assert b2 is not None and b2.stats[0] == docs2.count()
     shutil.rmtree(root, ignore_errors=True)
@@ -95,13 +96,13 @@ def test_pre_r10_store_without_dfs_is_reingested(spark, tmp_path):
     docs.write.mode("overwrite").parquet(str(fake / "documents.parquet"))
     root = _store_root(str(fake))
     shutil.rmtree(root, ignore_errors=True)
-    R._BUNDLE_CACHE.pop(str(fake), None)
+    artifacts.clear(str(fake))
     b1 = R._artifact_bundle(spark, str(fake))
     assert b1 is not None and b1.dfs is not None
     # simulate the pre-r10 format: drop the dfs entries from the store
     shutil.rmtree(os.path.join(root, "dfs"), ignore_errors=True)
     shutil.rmtree(os.path.join(root, "chunk_dfs"), ignore_errors=True)
-    R._BUNDLE_CACHE.pop(str(fake), None)
+    artifacts.clear(str(fake))
     b2 = R._artifact_bundle(spark, str(fake))
     assert b2 is not None and b2.stats[0] == docs.count()
     assert b2.dfs is not None and b2.dfs.count() > 0
@@ -122,7 +123,7 @@ def test_bundle_builds_beside_sibling_artifact(spark, tmp_path):
     docs.write.mode("overwrite").parquet(str(fake / "documents.parquet"))
     root = _store_root(str(fake))
     shutil.rmtree(root, ignore_errors=True)
-    R._BUNDLE_CACHE.pop(str(fake), None)
+    artifacts.clear(str(fake))
     # sibling artifact first → root exists, no meta.json
     from neural_search_spark.sources.index_store import load_or_build_artifact
 

@@ -72,8 +72,11 @@ def test_bpe_token_count_oracle(spark):
 
 
 def test_bpe_merges_cached(spark):
+    from neural_search_spark import artifacts
+
     registry._bpe_merges(spark, SF_SMOKE)
-    m1 = registry._BPE_MERGES_CACHE[SF_SMOKE]
+    m1 = artifacts.peek(SF_SMOKE, registry._bpe_merges.artifact_name)
+    assert m1 is not None
     assert registry._bpe_merges(spark, SF_SMOKE) is m1
 
 

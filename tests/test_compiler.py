@@ -328,10 +328,11 @@ def test_ann_artifacts_cached_across_queries(spark, sf_dir, monkeypatch):
     second search must hit the module cache — zero codebook training,
     zero centroid collects (the scale contract; the reference trains at
     segment build, `sparse/query/SparseAnnQueryBuilder.java` only reads)."""
+    from neural_search_spark import artifacts
     from neural_search_spark.operators import pq as PQ
     from neural_search_spark.plans import compiler as C
 
-    C.clear_ann_caches()
+    artifacts.clear(sf_dir)
     trains = []
     real_train = PQ.train_codebooks
     monkeypatch.setattr(
@@ -351,10 +352,10 @@ def test_ann_artifacts_cached_across_queries(spark, sf_dir, monkeypatch):
     # ivf centroids likewise collected once
     ispec = {"neural": {"vector": qv, "k": 5, "method": {"name": "ivf"}}}
     eng.search(ispec).collect()
-    assert (sf_dir, 16) in C._IVF_CENTROID_CACHE
-    cached = C._IVF_CENTROID_CACHE[(sf_dir, 16)]
+    cached = artifacts.peek(sf_dir, C._ivf_centroids.artifact_name, (16,))
+    assert cached is not None
     eng.search(ispec).collect()
-    assert C._IVF_CENTROID_CACHE[(sf_dir, 16)] is cached
+    assert artifacts.peek(sf_dir, C._ivf_centroids.artifact_name, (16,)) is cached
 
 
 def test_neural_method_unknown_raises(engine):

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from neural_search_spark import catalog, registry
+from neural_search_spark import artifacts, catalog, registry
 from neural_search_spark.plans import compiler
 from neural_search_spark.plans.compiler import Engine
 from neural_search_spark.sources import index_store as IS
@@ -58,12 +58,18 @@ def test_attached_plan_reads_store(spark, store):
 
 
 def test_ann_artifacts_attach(spark, store):
-    compiler.clear_ann_caches()
+    artifacts.clear(SF_SMOKE)
+    bundle = IS.load_index(spark, store)
     loaded = Engine(spark, SF_SMOKE)
-    loaded.attach_index(IS.load_index(spark, store))
-    # caches are pre-seeded by attach — no query-time collect/training
-    assert (SF_SMOKE, registry.IVF_NUM_CENTROIDS) in compiler._IVF_CENTROID_CACHE
-    assert any(k[0] == SF_SMOKE for k in compiler._PQ_INDEX_CACHE)
+    loaded.attach_index(bundle)
+    # the store is pre-seeded by attach — no query-time collect/training
+    assert artifacts.peek(
+        SF_SMOKE, compiler._ivf_centroids.artifact_name, (registry.IVF_NUM_CENTROIDS,)
+    ) is bundle.centroids
+    books, codes = artifacts.peek(
+        SF_SMOKE, compiler._pq_index.artifact_name, (len(bundle.pq_codebooks[0]),)
+    )
+    assert books is bundle.pq_codebooks and codes is bundle.pq_codes
     qv = catalog.query_vector(spark, SF_SMOKE, registry.QUERY_VEC_ID)
     fresh = Engine(spark, SF_SMOKE)
     out_l = loaded.search(
@@ -73,7 +79,7 @@ def test_ann_artifacts_attach(spark, store):
         {"neural": {"vector": qv, "k": 10, "method": {"name": "ivf", "nprobe": 8}}}
     )
     assert _rows(out_l) == _rows(out_f)
-    compiler.clear_ann_caches()
+    artifacts.clear(SF_SMOKE)
 
 
 def test_meta_scalars_roundtrip(spark, store):

@@ -10,6 +10,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from neural_search_spark import artifacts
 from neural_search_spark import registry as R
 from neural_search_spark.operators import bm25 as B
 
@@ -34,8 +35,7 @@ def test_mlt_stats_from_token_dfs_matches_with_empty_docs(spark, tmp_path):
     )
     docs.write.mode("overwrite").parquet(str(fake / "documents.parquet"))
     sf = str(fake)
-    for cache in (R._POSTINGS_CACHE, R._TOKEN_DFS_CACHE, R._MLT_STATS_CACHE):
-        cache.pop(sf, None)
+    artifacts.clear(sf)
     try:
         expected = sorted(
             tuple(r) for r in B.mlt_stats(R._postings(spark, sf)).collect()
@@ -46,10 +46,7 @@ def test_mlt_stats_from_token_dfs_matches_with_empty_docs(spark, tmp_path):
         n_docs = {r[2] for r in got}
         assert n_docs == {3.0}  # 3 docs with postings, not 5
     finally:
-        for cache in (R._POSTINGS_CACHE, R._TOKEN_DFS_CACHE, R._MLT_STATS_CACHE):
-            df = cache.pop(sf, None)
-            if df is not None and hasattr(df, "unpersist"):
-                df.unpersist()
+        artifacts.clear(sf)
 
 
 def test_bpe_word_ids_dictionary_matches_inplan_encode(spark):
@@ -108,13 +105,13 @@ def test_plan_memo_fresh_execution_and_invalidation(spark, tmp_path):
     assert name in R._PLAN_MEMO_QUERIES
     fn = R.SPARK_QUERIES[name]
     sf = "/root/testdata/sf0.001"
-    key = (name, sf, spark.sparkContext.applicationId)
-    R._PLAN_MEMO.pop(key, None)
+    memo = f"plan.{name}"
     df1 = fn(spark, sf)
     rows1 = df1.collect()
-    stored1 = R._PLAN_MEMO[key][1]
+    stored1 = artifacts.peek(sf, memo)
+    assert stored1 is not None
     df2 = fn(spark, sf)
-    assert R._PLAN_MEMO[key][1] is stored1  # memo hit: same analyzed plan
+    assert artifacts.peek(sf, memo) is stored1  # memo hit: same analyzed plan
     assert df2 is not df1 and df2 is not stored1  # fresh Dataset per call
     # fresh physical plan per invocation == fresh ShuffleDependencys ==
     # no map-stage reuse (the actual skip mechanism is plan-object id)
@@ -128,15 +125,14 @@ def test_plan_memo_fresh_execution_and_invalidation(spark, tmp_path):
     # table — the memoized analyzed plan must be replaced
     fake = tmp_path / "sfcopy"
     shutil.copytree(sf, fake)
-    kf = (name, str(fake), spark.sparkContext.applicationId)
     fn(spark, str(fake))
-    stored_a = R._PLAN_MEMO[kf][1]
+    stored_a = artifacts.peek(str(fake), memo)
     fn(spark, str(fake))
-    assert R._PLAN_MEMO[kf][1] is stored_a
+    assert artifacts.peek(str(fake), memo) is stored_a
     docs = fake / "documents.parquet"
     os.utime(docs, ns=(os.stat(docs).st_mtime_ns + 10**9,) * 2)
     d2 = fn(spark, str(fake))
-    assert R._PLAN_MEMO[kf][1] is not stored_a
+    assert artifacts.peek(str(fake), memo) is not stored_a
     assert sorted(map(tuple, d2.collect())) == sorted(map(tuple, rows1))
 
 
@@ -165,7 +161,8 @@ def test_table_count_footer_equals_actual(spark):
         actual = spark.read.parquet(
             os.path.join(sf, "documents.parquet")
         ).count()
-        R._TABLE_COUNT_CACHE.pop((sf, "documents"), None)
+        # the undecorated builder: a fresh footer read, store untouched
+        assert R._table_count.__wrapped__(sf, "documents") == actual
         assert R._table_count(sf, "documents") == actual
 
 
@@ -231,17 +228,11 @@ def _cc_iterative(pairs):
     — the reference implementation the union-find path must match."""
     from neural_search_spark.operators import dedup as DD
 
-    old = os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES")
-    os.environ["SPARK_GRAFT_CC_LOCAL_MAX_EDGES"] = "0"
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DD, "CC_LOCAL_MAX_EDGES", 0)
         return sorted(
             tuple(r) for r in DD.connected_components(pairs).collect()
         )
-    finally:
-        if old is None:
-            del os.environ["SPARK_GRAFT_CC_LOCAL_MAX_EDGES"]
-        else:
-            os.environ["SPARK_GRAFT_CC_LOCAL_MAX_EDGES"] = old
 
 
 def test_cc_local_fallback_equals_iterative_loop(spark):
