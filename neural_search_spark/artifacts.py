@@ -78,10 +78,14 @@ def _state(spark, sf_dir: str) -> tuple[str | None, tuple]:
     return app, fingerprint(sf_dir)
 
 
-def lookup(spark, sf_dir: str, name: str, params: tuple, build: Callable[[], Any]) -> Any:
+def lookup(
+    spark, sf_dir: str, name: str, params: tuple, build: Callable[[], Any],
+    keep: Callable[[], bool] = lambda: True,
+) -> Any:
     """The artifact `name(params)` of corpus `sf_dir`: the stored one
     while its session and corpus fingerprint are current, else
-    `build()` (whose result, `None` included, is stored)."""
+    `build()`, whose result (`None` included) is stored unless `keep()`,
+    asked right after the build, is false."""
     try:
         app, fp = _state(spark, sf_dir)
     except Exception:
@@ -97,7 +101,8 @@ def lookup(spark, sf_dir: str, name: str, params: tuple, build: Callable[[], Any
             [k for k, e in _entries() if k[0] == sf_dir and not _current(e, app, fp)]
         )
     value = build()
-    _STORE[key] = _Entry(app, fp, value)
+    if keep():
+        _STORE[key] = _Entry(app, fp, value)
     return value
 
 

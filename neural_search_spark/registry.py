@@ -11459,33 +11459,38 @@ REAL_MODEL_HASH_DIM = 1024
 REAL_MODEL_QUERY = "spark join window stream"
 
 
-def _checkpoint_path() -> str:
+def _ckpt_path(file: str) -> str:
+    """Path of the checkpoint `file` shipped under resources/."""
     import os as _os
 
     return _os.path.join(
-        _os.path.dirname(_os.path.abspath(__file__)),
-        "resources", "hashproj_48.npz",
+        _os.path.dirname(_os.path.abspath(__file__)), "resources", file
     )
 
 
-def _register_real_model() -> bool:
+def _register_checkpoint(model_id: str, file: str, loader, dim: int) -> bool:
+    """Register the checkpoint resources/`file`, opened by
+    `loader(path)`, as model `model_id` (once per process); False when
+    the file is absent."""
     import os as _os
 
-    path = _checkpoint_path()
+    path = _ckpt_path(file)
     if not _os.path.exists(path):
         return False
-    if REAL_MODEL_ID not in models.MODEL_REGISTRY:
+    if model_id not in models.MODEL_REGISTRY:
         models.register_model(
-            REAL_MODEL_ID,
-            models.numpy_checkpoint_loader(path, hash_dim=REAL_MODEL_HASH_DIM),
-            dim=REAL_MODEL_DIM,
-            batch_size=64,
+            model_id, loader(path), dim=dim, batch_size=64,
             fingerprint=models.file_fingerprint(path),
         )
     return True
 
 
-_REAL_MODEL_OK = _register_real_model()
+REAL_MODEL_CKPT = "hashproj_48.npz"
+_REAL_MODEL_OK = _register_checkpoint(
+    REAL_MODEL_ID, REAL_MODEL_CKPT,
+    lambda path: models.numpy_checkpoint_loader(path, hash_dim=REAL_MODEL_HASH_DIM),
+    REAL_MODEL_DIM,
+)
 
 
 def q_real_model_dense_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11518,7 +11523,7 @@ def _real_model_encoder_ctes(sf_dir: str, q_cte: str = "qd") -> str:
     import duckdb as _duckdb
     import numpy as _np
 
-    W = _np.load(_checkpoint_path())["W"]
+    W = _np.load(_ckpt_path(REAL_MODEL_CKPT))["W"]
     con = _duckdb.connect()
     path = _os.path.join(sf_dir, "documents.parquet")
     toks = con.execute(
@@ -11799,35 +11804,10 @@ if _REAL_MODEL_OK:
 TRAINED_MODEL_ID = "lsa-trained-32"
 TRAINED_MODEL_DIM = 32
 TRAINED_MODEL_QUERY = "spark join window stream"
-
-
-def _trained_ckpt_path() -> str:
-    import os as _os
-
-    return _os.path.join(
-        _os.path.dirname(_os.path.abspath(__file__)),
-        "resources", "lsa_32.npz",
-    )
-
-
-def _register_trained_model() -> bool:
-    import os as _os
-
-    path = _trained_ckpt_path()
-    if not _os.path.exists(path):
-        return False
-    if TRAINED_MODEL_ID not in models.MODEL_REGISTRY:
-        models.register_model(
-            TRAINED_MODEL_ID,
-            models.trained_checkpoint_loader(path),
-            dim=TRAINED_MODEL_DIM,
-            batch_size=64,
-            fingerprint=models.file_fingerprint(path),
-        )
-    return True
-
-
-_TRAINED_MODEL_OK = _register_trained_model()
+TRAINED_MODEL_CKPT = "lsa_32.npz"
+_TRAINED_MODEL_OK = _register_checkpoint(
+    TRAINED_MODEL_ID, TRAINED_MODEL_CKPT, models.trained_checkpoint_loader, TRAINED_MODEL_DIM
+)
 
 
 def q_trained_model_dense_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11855,7 +11835,7 @@ def _trained_encoder_ctes(q_cte: str = "qd") -> str:
     inlined from the npz, so the chain is sf-independent."""
     import numpy as _np
 
-    z = _np.load(_trained_ckpt_path(), allow_pickle=True)
+    z = _np.load(_ckpt_path(TRAINED_MODEL_CKPT), allow_pickle=True)
     vocab, idf, W = z["vocab"], z["idf"], z["W"]
     vrows = ",\n  ".join(
         "('" + str(t).replace("'", "''") + "', " + repr(float(idf[i]))
@@ -12010,35 +11990,10 @@ if _TRAINED_MODEL_OK:
 
 TINYFORMER_MODEL_ID = "tiny-transformer-32"
 TINYFORMER_DIM = 32
-
-
-def _tinyformer_ckpt_path() -> str:
-    import os as _os
-
-    return _os.path.join(
-        _os.path.dirname(_os.path.abspath(__file__)),
-        "resources", "tiny_transformer_32.npz",
-    )
-
-
-def _register_tinyformer() -> bool:
-    import os as _os
-
-    path = _tinyformer_ckpt_path()
-    if not _os.path.exists(path):
-        return False
-    if TINYFORMER_MODEL_ID not in models.MODEL_REGISTRY:
-        models.register_model(
-            TINYFORMER_MODEL_ID,
-            models.transformer_checkpoint_loader(path),
-            dim=TINYFORMER_DIM,
-            batch_size=64,
-            fingerprint=models.file_fingerprint(path),
-        )
-    return True
-
-
-_TINYFORMER_OK = _register_tinyformer()
+TINYFORMER_CKPT = "tiny_transformer_32.npz"
+_TINYFORMER_OK = _register_checkpoint(
+    TINYFORMER_MODEL_ID, TINYFORMER_CKPT, models.transformer_checkpoint_loader, TINYFORMER_DIM
+)
 
 
 def q_transformer_model_dense_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12064,7 +12019,7 @@ def q_transformer_model_dense_topk(spark: SparkSession, sf_dir: str) -> DataFram
 def _tinyformer_vocab() -> list[str]:
     import numpy as _np
 
-    z = _np.load(_tinyformer_ckpt_path(), allow_pickle=True)
+    z = _np.load(_ckpt_path(TINYFORMER_CKPT), allow_pickle=True)
     return [str(t) for t in z["vocab"]]
 
 
@@ -12076,7 +12031,7 @@ def _tinyformer_max_len() -> int:
     while the query still said 48)."""
     import numpy as _np
 
-    z = _np.load(_tinyformer_ckpt_path(), allow_pickle=True)
+    z = _np.load(_ckpt_path(TINYFORMER_CKPT), allow_pickle=True)
     return int(z["_meta"][2])
 
 
@@ -12197,7 +12152,7 @@ def _tinyformer_quant_int_rows(
 
     from .functions import tinyformer as _TF
 
-    model = _TF.load_checkpoint(ckpt_path or _tinyformer_ckpt_path())
+    model = _TF.load_checkpoint(ckpt_path or _ckpt_path(TINYFORMER_CKPT))
     docs = _pd.read_parquet(f"{sf_dir}/documents.parquet")[["doc_id", "text"]]
     rows: list[tuple[int, list[int]]] = []
     for start in range(0, len(docs), 64):
@@ -12594,35 +12549,11 @@ if _TINYFORMER_OK:
 # ---------------------------------------------------------------------------
 
 TINYFORMER_BPE_MODEL_ID = "tiny-transformer-bpe-32"
-
-
-def _tinyformer_bpe_ckpt_path() -> str:
-    import os as _os
-
-    return _os.path.join(
-        _os.path.dirname(_os.path.abspath(__file__)),
-        "resources", "tiny_transformer_bpe_32.npz",
-    )
-
-
-def _register_tinyformer_bpe() -> bool:
-    import os as _os
-
-    path = _tinyformer_bpe_ckpt_path()
-    if not _os.path.exists(path):
-        return False
-    if TINYFORMER_BPE_MODEL_ID not in models.MODEL_REGISTRY:
-        models.register_model(
-            TINYFORMER_BPE_MODEL_ID,
-            models.transformer_checkpoint_loader(path),
-            dim=TINYFORMER_DIM,
-            batch_size=64,
-            fingerprint=models.file_fingerprint(path),
-        )
-    return True
-
-
-_TINYFORMER_BPE_OK = _register_tinyformer_bpe()
+TINYFORMER_BPE_CKPT = "tiny_transformer_bpe_32.npz"
+_TINYFORMER_BPE_OK = _register_checkpoint(
+    TINYFORMER_BPE_MODEL_ID, TINYFORMER_BPE_CKPT,
+    models.transformer_checkpoint_loader, TINYFORMER_DIM,
+)
 
 
 def _bpe_ckpt_tok() -> tuple[list[str], list[str], int]:
@@ -12630,7 +12561,7 @@ def _bpe_ckpt_tok() -> tuple[list[str], list[str], int]:
     checkpoint declares them."""
     import numpy as _np
 
-    z = _np.load(_tinyformer_bpe_ckpt_path(), allow_pickle=True)
+    z = _np.load(_ckpt_path(TINYFORMER_BPE_CKPT), allow_pickle=True)
     return (
         [str(t) for t in z["vocab"]],
         [str(m) for m in z["merges"]],
@@ -12730,7 +12661,7 @@ def transformer_bpe_int_oracle_sql(sf_dir: str) -> str:
     """DuckDB replay over the BPE checkpoint's quantized corpus
     embeddings (driver-side direct encode), pinned to the driver's
     grading corpus like transformer_int_oracle_sql."""
-    rows = _tinyformer_quant_int_rows(sf_dir, _tinyformer_bpe_ckpt_path())
+    rows = _tinyformer_quant_int_rows(sf_dir, _ckpt_path(TINYFORMER_BPE_CKPT))
     q_ints = _tinyformer_query_ints(TINYFORMER_BPE_MODEL_ID)
     vrows = ",\n  ".join(
         "(" + str(d) + ", [" + ", ".join(str(x) for x in v) + "]::BIGINT[])"
@@ -14287,317 +14218,43 @@ ORACLES = _ordered(ORACLES)
 
 
 # ---------------------------------------------------------------------------
-# r11 compiled-plan memo (judge r10 next-round #3, guide §7.3): for the
-# engine-compiled search family the dominant LOCAL cost left after r10
-# was per-invocation driver-side work — Engine construction, literal-
-# heavy Column building, py4j round-trips, and analysis of deep
-# compiled plans (0.1-7 s per query measured by
-# scripts/plan_memo_audit.py) — not cluster work. Each query below is
-# audit-verified PURE-PLAN on repeat construction: calling
-# fn(spark, sf_dir) again (after one full collect) launches ZERO Spark
-# jobs, so memoizing the returned DataFrame shifts no computation
-# between runs — every action on the memoized frame still recomputes
-# from the parquet inputs (this is a plan cache, not a result cache;
-# the audit tool and its JOBS/PURE classification are committed in
-# scripts/plan_memo_audit.py). Queries that run jobs during
-# construction (streaming batch faces, iterative k-means, eager
-# checkpoints/collects) are deliberately NOT listed: for them the memo
-# WOULD move per-run work out of the timed region.
-#
-# Stale-plan hazard (judge: "key includes corpus fingerprint"): memo
-# entries live in the artifact store (artifacts.py), which rebuilds on a
-# new applicationId (a restarted session never serves another session's
-# plans — analyzed plans are session-bound) or a changed corpus
-# fingerprint (a regenerated corpus misses and recompiles).
-_PLAN_MEMO_QUERIES = frozenset({
-    "a1_quantize",
-    "agg_over_hybrid",
-    "ann_bq_topk",
-    "ann_ivf_topk",
-    "ann_ivfpq_topk",
-    "ann_knn_join",
-    "ann_lsh_multitable",
-    "ann_lsh_neardup",
-    "ann_lsh_topk",
-    "ann_pq_topk",
-    "ann_sq8_topk",
-    "batch_dense_topk",
-    "batch_hybrid_fusion",
-    "batch_sparse_topk",
-    "bm25_edge_ngram",
-    "bm25_explain_doc",
-    "bm25_match",
-    "bm25_match_folded",
-    "bm25_match_stemmed",
-    "bm25_shingles",
-    "bool_scored",
-    "bpe_merge_pairs",
-    "bpe_token_count",
-    "bpe_token_count_arrow",
-    "c2_geometric_fusion",
-    "c3_harmonic_fusion",
-    # r11: LM rollups moved to the _bigram_counts/_token_dfs artifacts,
-    # doc_bg's localCheckpoint removed → construction is pure
-    # (re-audited by scripts/plan_memo_audit.py after the rewrite)
-    "ccnet_ppl_buckets",
-    "completion_suggest",
-    "cross_index_boosted",
-    "cross_index_search",
-    "curate_training_set",
-    "customer_no_orders",
-    "decontaminate_overlap",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_minhash_sig",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_simhash_neardup",
-    "dedup_span_windows",
-    "distance_feature",
-    "docs_grouping_sets",
-    "domain_cap_sample",
-    "dsir_select",
-    "dsl_agg_adjacency_matrix",
-    "dsl_agg_auto_date_histogram",
-    "dsl_agg_boxplot",
-    "dsl_agg_bucket_script",
-    "dsl_agg_bucket_selector_sort",
-    "dsl_agg_children",
-    "dsl_agg_composite",
-    "dsl_agg_cumulative_cardinality",
-    "dsl_agg_date_histogram_fixed",
-    "dsl_agg_date_range",
-    "dsl_agg_diversified_sampler",
-    "dsl_agg_extended_stats",
-    "dsl_agg_extended_stats_bucket",
-    "dsl_agg_filters",
-    "dsl_agg_geo_bounds",
-    "dsl_agg_geo_centroid",
-    "dsl_agg_global",
-    "dsl_agg_histogram",
-    "dsl_agg_mad",
-    "dsl_agg_matrix_stats",
-    "dsl_agg_max_bucket",
-    "dsl_agg_missing",
-    "dsl_agg_moving_fn",
-    "dsl_agg_moving_percentiles",
-    "dsl_agg_multi_terms",
-    "dsl_agg_nested_reverse",
-    "dsl_agg_normalize",
-    "dsl_agg_over_match",
-    "dsl_agg_percentile_ranks",
-    "dsl_agg_percentiles",
-    "dsl_agg_percentiles_bucket",
-    "dsl_agg_pipeline",
-    "dsl_agg_range",
-    "dsl_agg_rare_terms",
-    "dsl_agg_rate",
-    "dsl_agg_sampler",
-    "dsl_agg_scripted_metric",
-    "dsl_agg_serial_diff",
-    "dsl_agg_significant_text",
-    "dsl_agg_stats",
-    "dsl_agg_stats_bucket",
-    "dsl_agg_string_stats",
-    "dsl_agg_t_test",
-    "dsl_agg_terms",
-    "dsl_agg_terms_nested",
-    "dsl_agg_top_hits",
-    "dsl_agg_top_metrics",
-    "dsl_agg_weighted_avg",
-    "dsl_boosting",
-    "dsl_constant_score",
-    "dsl_dis_max",
-    "dsl_script_score",
-    "emb_centroids",
-    "emb_neardup_cosine",
-    "emb_neardup_exact",
-    "emb_neardup_scaled",
-    "emb_norm_stats",
-    "events_approx_distinct",
-    "events_approx_quantiles",
-    "events_argmax",
-    "events_asof_join",
-    "events_band_join",
-    "events_cube",
-    "events_histogram",
-    "events_json_extract",
-    "events_ntile",
-    "events_percentiles",
-    "events_pivot",
-    "events_rollup",
-    "events_session_window",
-    "events_sessionize",
-    "events_sliding_window",
-    "events_stats_by_type",
-    "events_user_cumulative",
-    "events_user_deltas",
-    "events_windowed_agg",
-    "f10_prune_max_ratio",
-    "f11_prune_abs_value",
-    "f12_prune_split",
-    "f1_dense_embed_stub",
-    "f4_chunk_fixed_token",
-    "f5_chunk_delimiter",
-    "f6_chunk_fixed_char",
-    "f8_prune_topk",
-    "f9_prune_alpha_mass",
-    "field_caps",
-    "function_score_decay",
-    "function_score_full",
-    "fuzzy_match",
-    "geo_bounding_box",
-    "geo_distance",
-    "geotile_grid",
-    "has_child_sum",
-    "has_parent_inherit",
-    "inference_length_buckets",
-    "intervals_ordered",
-    "k2_sort_search_after",
-    "k4_pagination",
-    "k5_collapse_by_source",
-    "k5_collapse_capped",
-    "k6_posting_truncation",
-    "label_rebalance",
-    "late_interaction_maxsim",
-    "match_all_page",
-    "match_bool_prefix",
-    "match_phrase",
-    "match_phrase_prefix",
-    "match_phrase_slop",
-    "matryoshka_topk",
-    "mget_docs",
-    "mine_hard_negatives",
-    "mix_sources",
-    "mm_audio_neardup",
-    "mm_audio_pcm_stats",
-    "mm_frame_sample",
-    "mm_image_pixel_stats",
-    "mm_media_meta",
-    "mm_phash_neardup",
-    "mm_real_decode_dims",
-    "mm_resize_pixel_stats",
-    "more_like_this",
-    "multi_match_best_fields",
-    "multi_match_most_fields",
-    "n1_minmax_bounds",
-    "n2_l2_fusion",
-    "n3_zscore_fusion",
-    "n4_rrf_fusion",
-    "nb_lang_predict",
-    "nested_inner_hits",
-    "next_word_suggest",
-    "p1_dense_filtered_topk",
-    "p4_radial_search",
-    "pack_sequences",
-    "parent_id_children",
-    "percolate_dense",
-    "percolate_match",
-    "phrase_suggest",
-    "pinned_query",
-    "prefix_suggest",
-    "q1_rerank_cross_encoder",
-    "q2_rerank_by_field",
-    "q6_hybrid_explain",
-    "q7_highlight",
-    "query_string_bool",
-    "query_string_field_boost",
-    "r10_dense_rescore",
-    "r10_two_phase_sparse",
-    "r1_neural_dense_topk",
-    "r2_chunk_max_topk",
-    "r2_inner_hits",
-    "r3_neural_sparse_exact",
-    "r6_hybrid_minmax_arith",
-    "r7_seismic_oracle_exact",
-    "r7_seismic_sparse_ann",
-    "rank_eval_metrics",
-    "rank_feature_saturation",
-    "real_model_dense_topk",
-    "real_model_hybrid",
-    "rescore_weighted",
-    "runtime_field_agg",
-    "sample_stratified_hash",
-    "sample_weighted",
-    "script_score_cosine",
-    "search_fetch_fields",
-    "search_template_match",
-    "seismic_explain",
-    "semantic_dedup",
-    "semantic_dedup_scaled",
-    "semantic_highlight_best",
-    "shuffle_deterministic",
-    "significant_terms",
-    "simple_query_string",
-    "sort_script_page",
-    "span_containing",
-    "span_first",
-    "span_near",
-    "span_not",
-    "span_or",
-    "span_within",
-    "split_train_valid_test",
-    "substring_dedup",
-    "term_suggest",
-    "term_vectors_doc",
-    "terms_set",
-    "text_bigram_nll",
-    "text_bigram_pmi",
-    "text_c4_quality",
-    "text_fingerprint",
-    "text_gopher_quality",
-    "text_gopher_repetition",
-    "text_lang_id",
-    "text_normalize",
-    "text_pii_redact",
-    "text_quality",
-    "text_repetition",
-    "text_source_kl",
-    "text_token_count",
-    "text_unigram_nll",
-    "topk_per_group",
-    "tpch_q1",
-    "tpch_q10",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q2",
-    "tpch_q20",
-    "tpch_q21",
-    "tpch_q22",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q9",
-    "trained_model_dense_topk",
-    "trained_model_hybrid",
-    "transformer_bpe_ckpt_tokenizer_ids",
-    "transformer_bpe_model_dense_topk_int",
-    "transformer_bpe_tokenizer_ids",
-    "transformer_model_dense_topk",
-    "transformer_model_dense_topk_int",
-    "transformer_tokenizer_ids",
-    "update_by_query",
-    "vocab_coverage",
-    "wrapper_match",
-})
+# Plan memo. Much of a search query's cost on a small corpus is driver-
+# side: Engine construction, literal-heavy Column building, py4j round
+# trips and the analysis of deep compiled plans. Every SPARK_QUERIES
+# entry keeps the DataFrame it built in the artifact store
+# (`plan.<name>`) for later calls, but only when building it submitted
+# no Spark job:
+# then the memo moves no cluster work out of a later run, since every
+# action on the frame still recomputes from the parquet inputs (a plan
+# cache, not a result cache). A construction that ran jobs (reading a
+# table's schema the first time, building an artifact, a streaming
+# batch, iterative k-means, an eager checkpoint or collect) is returned
+# unstored and the next call measures again. Jobs other threads submit
+# meanwhile count too, which can only leave a plan unstored. The store
+# drops the entry on a new applicationId (analyzed plans are session-
+# bound) or a changed corpus fingerprint.
+def _jobs_submitted(spark: SparkSession) -> int:
+    """Jobs the DAGScheduler has numbered so far. Read synchronously:
+    statusTracker is fed by the listener bus and can still miss a job
+    that just finished."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
 
 def _plan_memo_wrap(name: str, fn):
     import functools as _functools
 
     @_functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+        before = None
+
+        def build() -> DataFrame:
+            nonlocal before
+            before = _jobs_submitted(spark)
+            return fn(spark, sf_dir)
+
         df = artifacts.lookup(
-            spark, sf_dir, f"plan.{name}", (), lambda: fn(spark, sf_dir)
+            spark, sf_dir, f"plan.{name}", (), build,
+            keep=lambda: _jobs_submitted(spark) == before,
         )
         # Return a FRESH Dataset wrapping the memoized ANALYZED plan,
         # never the stored object itself: re-collecting one Dataset
@@ -14615,7 +14272,4 @@ def _plan_memo_wrap(name: str, fn):
     return wrapped
 
 
-for _name in _PLAN_MEMO_QUERIES:
-    if _name in SPARK_QUERIES:
-        SPARK_QUERIES[_name] = _plan_memo_wrap(_name, SPARK_QUERIES[_name])
-del _name
+SPARK_QUERIES = {n: _plan_memo_wrap(n, fn) for n, fn in SPARK_QUERIES.items()}

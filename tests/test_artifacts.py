@@ -90,6 +90,9 @@ def test_regenerate_in_place_rebuilds_every_artifact(spark, tmp_path):
         assert R._table_count(sf, "documents") == full.num_rows
         assert catalog.table(spark, sf, "documents").count() == full.num_rows
         R.SPARK_QUERIES["dedup_exact"](spark, sf).collect()
+        # read no schema and built no artifact this time: memoized
+        R.SPARK_QUERIES["dedup_exact"](spark, sf)
+        assert artifacts.peek(sf, "plan.dedup_exact") is not None
 
         subset = full.slice(0, 100)
         pq.write_table(subset, path)

@@ -19,7 +19,7 @@ SF_BIG = "/root/testdata/sf0.1"
 
 
 def test_checkpoint_is_a_real_file_loaded_lazily():
-    path = R._checkpoint_path()
+    path = R._ckpt_path(R.REAL_MODEL_CKPT)
     import os
 
     assert os.path.getsize(path) > 100_000  # real weights, not a stub

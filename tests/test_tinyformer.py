@@ -172,9 +172,9 @@ def test_distillation_fidelity_vs_lsa_teacher():
     import duckdb
 
     from neural_search_spark import models
-    from neural_search_spark.registry import _trained_ckpt_path
+    from neural_search_spark.registry import TRAINED_MODEL_CKPT, _ckpt_path
 
-    teacher = models.trained_checkpoint_loader(_trained_ckpt_path())()
+    teacher = models.trained_checkpoint_loader(_ckpt_path(TRAINED_MODEL_CKPT))()
     student = TF.load_checkpoint(CKPT)
     texts = [
         r[0] for r in duckdb.sql(
@@ -352,14 +352,15 @@ def test_bpe_tokenizer_no_driver_word_collect(spark):
 def _bpe_ckpt():
     from neural_search_spark.registry import (
         _TINYFORMER_BPE_OK,
-        _tinyformer_bpe_ckpt_path,
+        TINYFORMER_BPE_CKPT,
+        _ckpt_path,
     )
 
     if not _TINYFORMER_BPE_OK:
         import pytest
 
         pytest.skip("BPE transformer checkpoint not trained")
-    return TF.load_checkpoint(_tinyformer_bpe_ckpt_path())
+    return TF.load_checkpoint(_ckpt_path(TINYFORMER_BPE_CKPT))
 
 
 def test_bpe_ckpt_is_subword_not_word():
@@ -419,10 +420,10 @@ def test_bpe_ckpt_distillation_fidelity():
     import duckdb
 
     from neural_search_spark import models
-    from neural_search_spark.registry import _trained_ckpt_path
+    from neural_search_spark.registry import TRAINED_MODEL_CKPT, _ckpt_path
 
     student = _bpe_ckpt()
-    teacher = models.trained_checkpoint_loader(_trained_ckpt_path())()
+    teacher = models.trained_checkpoint_loader(_ckpt_path(TRAINED_MODEL_CKPT))()
     texts = [
         r[0] for r in duckdb.sql(
             "SELECT text FROM '/root/testdata/sf0.001/documents.parquet'"

@@ -18,11 +18,11 @@ from .conftest import SF_SMOKE
 
 
 def _encoder():
-    return models.trained_checkpoint_loader(registry._trained_ckpt_path())()
+    return models.trained_checkpoint_loader(registry._ckpt_path(registry.TRAINED_MODEL_CKPT))()
 
 
 def test_checkpoint_is_learned_and_rounded():
-    z = np.load(registry._trained_ckpt_path(), allow_pickle=True)
+    z = np.load(registry._ckpt_path(registry.TRAINED_MODEL_CKPT), allow_pickle=True)
     W, idf, vocab = z["W"], z["idf"], z["vocab"]
     assert W.shape == (192, 32) and idf.shape == (192,)
     # committed weights are decimal-rounded (Python/SQL literal parity)
