@@ -66,19 +66,3 @@ def tf_map(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Dat
         .groupBy(id_col)
         .agg(F.map_from_entries(F.collect_list(F.struct("token", "weight"))).alias("sparse"))
     )
-
-
-def sparse_dot_map(q: Column, d: Column) -> Column:
-    """Σ over intersecting keys of q[k]*d[k] — pure map expressions."""
-    prod = F.map_zip_with(q, d, lambda k, qv, dv: qv * dv)
-    vals = F.filter(F.map_values(prod), lambda v: v.isNotNull())
-    return F.aggregate(vals, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def lit_token_map(token_weights: dict[str, float]) -> Column:
-    """Raw query-token map supplied inline, as the reference allows
-    (`query/NeuralSparseQueryBuilder.java:509-552` raw token path)."""
-    entries = []
-    for k, v in token_weights.items():
-        entries.append(F.struct(F.lit(k).alias("key"), F.lit(float(v)).cast("double").alias("value")))
-    return F.map_from_entries(F.array(*entries))

@@ -49,8 +49,11 @@ def unit_vectors(embs: DataFrame, id_col: str = "vec_id", vec_col: str = "embedd
 
 NUM_MINHASHES = 16
 BAND_SIZE = 2  # 8 bands of 2 → catches jaccard ≳ 0.5 with high prob.
-# edge budget of connected_components' in-driver union-find (0 disables it)
+# connected_components labels graphs of at most this many edges in the
+# driver (union-find) and larger ones with distributed star rounds
 CC_LOCAL_MAX_EDGES = 1_000_000
+# large-star/small-star rounds before connected_components gives up
+_CC_MAX_ROUNDS = 100
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -246,25 +249,6 @@ def jaccard_verify(
         .select("a", "b", "jaccard")
     )
     return out
-
-
-def minhash_lsh_dedup(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Full MinHash→LSH→verify pipeline: (a, b, jaccard) near-dup pairs."""
-    # The shingle frame feeds four consumers (signatures, sizes, both
-    # sides of the verify join); without persist each one would re-run
-    # the explode. Cache it for the lifetime of the result plan — the
-    # same role as the reference's clustered-postings warmup cache
-    # (`rest/RestNeuralSparseWarmupHandler.java:70`).
-    sh = shingle_sets(docs, n, id_col, text_col).persist()
-    sigs = minhash_signatures(sh, id_col=id_col)
-    cands = lsh_candidate_pairs(sigs, id_col=id_col)
-    return jaccard_verify(cands, sh, threshold, id_col=id_col)
 
 
 def collapse_exact(
@@ -846,12 +830,10 @@ def span_dedup(
     )
 
 
-def _cc_local(pairs: DataFrame, rows, a_col: str = "a") -> DataFrame:
-    """Exact in-driver connected components over collected edge rows:
-    union-find with path compression, then component label = min member
-    id — the same (node, component) relation the distributed
-    min-propagation loop converges to. Output schema matches the loop's
-    (node, component) with the node dtype of the input's pair columns."""
+def _cc_local(edges: DataFrame) -> DataFrame:
+    """Exact in-driver connected components over the collected (u, v)
+    edges: union-find with path compression whose root is always its
+    set's min id. Output (node, component) in the edges' node dtype."""
     parent: dict = {}
 
     def find(x):
@@ -862,130 +844,126 @@ def _cc_local(pairs: DataFrame, rows, a_col: str = "a") -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        a, b = r[0], r[1]
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-    comp_min: dict = {}
-    for node in parent:
-        root = find(node)
-        cur = comp_min.get(root)
-        if cur is None or node < cur:
-            comp_min[root] = node
-    data = [(node, comp_min[find(node)]) for node in sorted(parent)]
-    from pyspark.sql import types as T
-
-    node_type = pairs.schema[a_col].dataType
-    schema = T.StructType(
-        [
-            T.StructField("node", node_type, False),
-            T.StructField("component", node_type, False),
-        ]
+    for a, b in edges.collect():
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        parent[max(ra, rb)] = min(ra, rb)
+    t = edges.schema["u"].dataType.simpleString()
+    return edges.sparkSession.createDataFrame(
+        [(node, find(node)) for node in sorted(parent)], f"node {t}, component {t}"
     )
-    return pairs.sparkSession.createDataFrame(data, schema)
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Duplicate-cluster assignment: (node, component) where component =
-    the minimum node id transitively reachable through the pair graph.
+def _sym(e: DataFrame) -> DataFrame:
+    # both orientations of every edge
+    return e.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u"), F.col("v")),
+                F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
+            )
+        ).alias("e")
+    ).select("e.u", "e.v")
+
+
+# Both star steps take and return edges with u != v.
+def _large_star(e: DataFrame) -> DataFrame:
+    # hang every larger neighbor v of u onto m = min(u, N(u)) < v
+    sym = _sym(e)
+    mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+    return (
+        sym.join(mins, "u")
+        .where(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .distinct()
+    )
+
+
+def _small_star(e: DataFrame) -> DataFrame:
+    # hang u and its smaller neighbors onto the least of them
+    d = e.select(
+        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+    ).distinct()
+    mins = d.groupBy("u").agg(F.min("v").alias("m"))
+    hang = d.join(mins, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
+    keep = mins.select("u", F.col("m").alias("v"))
+    return hang.union(keep).where(F.col("u") != F.col("v")).distinct()
+
+
+def _cc_star(edges: DataFrame) -> tuple[DataFrame, int]:
+    """Large-star/small-star connected components (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) over the
+    (u, v) edges: (materialized labels, rounds run). Alternating rounds
+    converge in O(log n) rounds whatever the graph's diameter, each
+    one shuffle join plus one groupBy. A round that reaches
+    _CC_MAX_ROUNDS without a fixpoint raises instead of returning
+    unconverged labels."""
+    e = edges.where(F.col("u") != F.col("v"))
+    for rounds in range(1, _CC_MAX_ROUNDS + 1):
+        new = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        # fixpoint: no edge in exactly one of {old, new}; the job also
+        # materializes the checkpoint
+        changed = (
+            new.join(e, ["u", "v"], "left_anti")
+            .union(e.join(new, ["u", "v"], "left_anti"))
+            .limit(1)
+            .count()
+        )
+        e = new
+        if changed == 0:
+            break
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {_CC_MAX_ROUNDS} "
+            "large-star/small-star rounds"
+        )
+    # at the fixpoint every component is a star rooted at its min node;
+    # the self-loops put back the nodes that only ever linked to
+    # themselves (u == v edges never enter a round)
+    labels = (
+        _sym(e)
+        .unionByName(edges.where(F.col("u") == F.col("v")))
+        .groupBy(F.col("u").alias("node"))
+        .agg(F.least(F.min("v"), F.first("u")).alias("component"))
+        .localCheckpoint(eager=True)
+    )
+    return labels, rounds
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Duplicate-cluster assignment over near-dup pairs (a, b):
+    (node, component) where component = the minimum node id
+    transitively reachable through the pair graph, in the input's node
+    dtype. Rows with a null endpoint are not edges; a node whose only
+    edge is a self-loop (x, x) keeps its row (x, x).
 
     The last stage of every real dedup pipeline: near-dup PAIRS from
     LSH/SimHash are not enough — A~B and B~C must collapse to one
-    cluster {A,B,C} with one canonical survivor. The reference has no
-    graph stage (its collapse K5 is single-key group-by,
-    `processor/collapse/CollapseDataCollector.java:114-135`); this is a
-    training-data-pipeline addition.
+    cluster {A,B,C} with one canonical survivor. It is the graph form
+    of the reference's single-key collapse
+    (`processor/collapse/CollapseDataCollector.java:114-135`).
 
-    Algorithm: iterative min-label propagation. Each round every node
-    takes the min label among itself and its neighbors — one shuffle
-    join + one groupBy per round, converging in O(graph diameter)
-    rounds. Near-dup clusters are shallow (duplicates of a common
-    ancestor), so diameter is small; `localCheckpoint` truncates the
-    lineage each round so the plan does not grow with iterations. At
-    1000-executor scale the same loop runs with edges partitioned by
-    `v`; for adversarially deep graphs swap in the large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce"),
-    which converges in O(log n) rounds with the same per-round shape.
-
-    SMALL-GRAPH FALLBACK (optimization r11, guide §1.2/§7.3): when the
-    pair set fits a bounded driver budget (≤ CC_LOCAL_MAX_EDGES rows,
-    probed with one short-circuiting limit+collect job), the component
-    labels come from an exact in-driver union-find over the collected
-    edges instead of the distributed loop. The pair pipeline then
-    executes exactly ONCE (the probe job) versus persist + seed + one
-    tiny convergence job per round — 4-6 scheduler round-trips of pure
-    driver latency on a near-dup graph whose edge set is orders of
-    magnitude smaller than the corpus (LSH pair output is linear in
-    near-duplicate content, not in corpus size). Past the budget the
-    probe is abandoned and the distributed loop runs unchanged — the
-    100 TB path. Same result by construction: union-find labels every
-    node with the min id reachable in its component, the fixpoint the
-    propagation loop converges to (equality pinned in
-    tests/test_r11_optimizations.py on chains, stars, random graphs and
-    the corpus fixture). The threshold bounds driver work by edge
-    count, NOT tuned to local[32] — it is the broadcast-join-style
-    small-side cutoff.
+    The (a, b) projection is persisted and counted once, so the pair
+    pipeline upstream runs once whichever path labels it:
+    - at most CC_LOCAL_MAX_EDGES edges: collected and labelled by an
+      exact in-driver union-find (`_cc_local`) — near-dup graphs are
+      linear in duplicated content, not corpus size, so this is the
+      common case: the count fills the cache, one collect reads it;
+    - over the budget: large-star/small-star rounds on the cached edges
+      until a fixpoint (`_cc_star`), O(log n) rounds on any graph, a
+      raise past the round cap. The labels are materialized before
+      the edges are released.
+    Both paths give the same relation (tests/test_dedup_clusters.py and
+    tests/test_r11_optimizations.py run every graph through both).
     """
-    if CC_LOCAL_MAX_EDGES > 0:
-        probe = (
-            pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-            .limit(CC_LOCAL_MAX_EDGES + 1)
-            .collect()
-        )
-        if len(probe) <= CC_LOCAL_MAX_EDGES:
-            return _cc_local(pairs, probe, a_col)
-    # symmetrize in ONE pass over pairs (a union of two selects would
-    # run the upstream pair pipeline twice)
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
-                    F.struct(F.col(b_col).alias("u"), F.col(a_col).alias("v")),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
-        .persist()
-    )
-    # seed with one propagation round folded in: label(u) = min(u, N(u))
-    labels = (
-        edges.groupBy(F.col("u").alias("node"))
-        .agg(F.least(F.min("v"), F.first("u")).alias("component"))
-        .localCheckpoint(eager=False)
-    )
-    # labels are monotone non-increasing per node, so the frame-wide sum
-    # is strictly decreasing until the fixpoint: one tiny agg job per
-    # round doubles as convergence check AND checkpoint materializer
-    # (no separate join-with-previous + count).
-    prev_sum = labels.agg(F.sum(F.col("component").cast("decimal(38,0)"))).collect()[0][0]
-    for _ in range(max_iter):
-        neighbor = edges.join(
-            labels.select(F.col("node").alias("v"), "component"), "v"
-        ).select(F.col("u").alias("node"), "component")
-        labels = (
-            labels.union(neighbor)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=False)
-        )
-        cur_sum = labels.agg(F.sum(F.col("component").cast("decimal(38,0)"))).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
-    return labels
+    # the null filter comes after the persist: over the projection it
+    # would be pushed below it and evaluate the endpoints twice
+    edges = pairs.select(F.col("a").alias("u"), F.col("b").alias("v")).persist()
+    try:
+        over = edges.count() > CC_LOCAL_MAX_EDGES
+        valid = edges.where(F.col("u").isNotNull() & F.col("v").isNotNull())
+        return _cc_star(valid)[0] if over else _cc_local(valid)
+    finally:
+        edges.unpersist()
 
 
 def soft_weights(
@@ -1030,93 +1008,6 @@ def soft_weights(
         )
     )
     return out.orderBy("doc_id") if ordered else out
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iter: int = 50,
-    rounds_out: list | None = None,
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14): the
-    adversarial-depth companion to `connected_components`. Alternating
-    large-star (hang every larger neighbor onto the neighborhood min)
-    and small-star (contract the smaller neighbors) rounds converge in
-    O(log n) iterations regardless of graph DIAMETER — label
-    propagation is O(diameter), which a million-node chain turns into a
-    million rounds; this turns it into ~20. Same per-round plan shape
-    (one shuffle join + one groupBy), so it scales identically.
-
-    Returns (node, component) with component = min reachable id —
-    bit-identical to `connected_components` (property-tested). Pass a
-    list as `rounds_out` to observe the iteration count.
-    """
-    edges = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    def _sym(e: DataFrame) -> DataFrame:
-        return e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u"), F.col("v")),
-                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
-                )
-            ).alias("e")
-        ).select("e.u", "e.v")
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        sym = _sym(e)
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        return (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        d = (
-            e.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        mins = d.groupBy("u").agg(F.min("v").alias("m"))
-        hang = d.join(mins, "u").select(F.col("v").alias("u"), F.col("m").alias("v"))
-        keep = mins.select("u", F.col("m").alias("v"))
-        return hang.union(keep).where(F.col("u") != F.col("v")).distinct()
-
-    rounds = 0
-    for _ in range(max_iter):
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        rounds += 1
-        # fixpoint check over the (small) pair frame: any edge present
-        # in exactly one of {old, new}? Two anti joins, both tiny next
-        # to the corpus that produced the pairs.
-        changed = (
-            new_edges.join(edges, ["u", "v"], "left_anti")
-            .union(edges.join(new_edges, ["u", "v"], "left_anti"))
-            .limit(1)
-            .count()
-        )
-        edges = new_edges
-        if changed == 0:
-            break
-    if rounds_out is not None:
-        rounds_out.append(rounds)
-    # at the fixpoint every component is a star rooted at its min node
-    sym = _sym(edges)
-    return sym.groupBy(F.col("u").alias("node")).agg(
-        F.least(F.min("v"), F.first("u")).alias("component")
-    )
 
 
 def exact_substring_dedup(

@@ -481,6 +481,14 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DD.jaccard_verify(cands, sh, JACCARD_THRESHOLD).persist()
 
 
+@artifacts.artifact
+def _lsh_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(node, component) near-dup clusters over the `_lsh_pairs` graph —
+    the one LSH clustering behind dedup_clusters, split_leakage_safe,
+    dedup_soft_weights and curation_pipeline."""
+    return DD.connected_components(_lsh_pairs(spark, sf_dir))
+
+
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round4(_lsh_pairs(spark, sf_dir), "jaccard")
 
@@ -509,8 +517,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected-components cluster assignment with canonical survivor
     (training-data-pipeline addition; the reference's collapse K5 is
     single-key dedup only, `processor/collapse/CollapseDataCollector.java:114-135`)."""
-    prs = _lsh_pairs(spark, sf_dir)
-    cc = DD.connected_components(prs)
+    cc = _lsh_components(spark, sf_dir)
     sizes = cc.groupBy("component").agg(F.count("*").alias("cluster_size"))
     return (
         cc.join(sizes, "component")
@@ -12791,7 +12798,7 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Leakage invariant (tested): no verified near-dup pair straddles
     two splits."""
     docs = catalog.table(spark, sf_dir, "documents")
-    cc = DD.connected_components(_lsh_pairs(spark, sf_dir)).select(
+    cc = _lsh_components(spark, sf_dir).select(
         F.col("node").alias("doc_id"), "component"
     )
     gk = F.coalesce(F.col("component"), F.col("doc_id"))
@@ -13385,7 +13392,7 @@ def q_dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup-adjacent stage; batch ≡ micro-batch pinned in
     tests/test_streaming_quality_gate.py)."""
     docs = catalog.table(spark, sf_dir, "documents")
-    cc = DD.connected_components(_lsh_pairs(spark, sf_dir))
+    cc = _lsh_components(spark, sf_dir)
     return DD.soft_weights(docs, cc, ordered=True)
 
 
@@ -13794,7 +13801,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-backs) — plus one broadcast join for the clique weights;
     see curation_frame for the measured plan story."""
     docs = catalog.table(spark, sf_dir, "documents")
-    cc = DD.connected_components(_lsh_pairs(spark, sf_dir))
+    cc = _lsh_components(spark, sf_dir)
     return curation_frame(docs, cc)
 
 

@@ -6,6 +6,7 @@ near-dup clustering is a training-data-pipeline addition."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from neural_search_spark.operators import dedup as DD
@@ -15,10 +16,32 @@ from .conftest import SF_SMOKE
 from .oracle_check import compare
 
 
-def _components(spark, edges):
+def _components(spark, edges, over_budget=False):
+    """connected_components as {node: component}; `over_budget` forces
+    the distributed large-star/small-star path."""
     prs = spark.createDataFrame(edges, "a long, b long")
-    cc = DD.connected_components(prs)
-    return {r["node"]: r["component"] for r in cc.collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        if over_budget:
+            mp.setattr(DD, "CC_LOCAL_MAX_EDGES", 0)
+        cc = DD.connected_components(prs)
+        return {r["node"]: r["component"] for r in cc.collect()}
+
+
+def _star_rounds(spark, edges):
+    """(labels, rounds) of the over-budget path on `edges`."""
+    rounds: list = []
+    real = DD._cc_star
+
+    def spy(e):
+        out = real(e)
+        rounds.append(out[1])
+        return out
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DD, "_cc_star", spy)
+        got = _components(spark, edges, over_budget=True)
+    assert len(rounds) == 1
+    return got, rounds[0]
 
 
 def test_cc_two_clusters(spark):
@@ -59,8 +82,9 @@ def test_cluster_sizes_consistent(spark):
 
 
 def test_cc_random_graphs_match_union_find(spark):
-    """Property check: on random graphs, distributed label propagation
-    must agree with a driver-side union-find (min-id canonical)."""
+    """Property check: on random graphs, both paths — the in-driver
+    union-find and the over-budget large-star/small-star rounds — must
+    agree with an independent union-find (min-id canonical)."""
     import random
 
     rng = random.Random(7)
@@ -86,19 +110,15 @@ def test_cc_random_graphs_match_union_find(spark):
                 parent[max(ra, rb)] = min(ra, rb)
         touched = {x for e in edges for x in e}
         expect = {x: find(x) for x in touched}
-        got = _components(spark, [(int(a), int(b)) for a, b in edges])
-        assert got == expect, f"trial {trial}: {got} != {expect}"
+        edges = [(int(a), int(b)) for a, b in edges]
+        for over in (False, True):
+            got = _components(spark, edges, over_budget=over)
+            assert got == expect, f"trial {trial} over={over}: {got} != {expect}"
 
 
-# -- large-star/small-star variant (adversarial-depth graphs) -------------
+# -- over-budget path: large-star/small-star (adversarial-depth graphs) ----
 
-def _components_star(spark, edges, rounds_out=None):
-    prs = spark.createDataFrame(edges, "a long, b long")
-    cc = DD.connected_components_star(prs, rounds_out=rounds_out)
-    return {r["node"]: r["component"] for r in cc.collect()}
-
-
-def test_cc_star_matches_label_propagation(spark):
+def test_cc_star_matches_union_find(spark):
     import random
 
     rng = random.Random(13)
@@ -109,9 +129,9 @@ def test_cc_star_matches_label_propagation(spark):
              for _ in range(rng.randint(5, 60))}
         )
         edges = [(int(a), int(b)) for a, b in edges]
-        plain = _components(spark, edges)
-        star = _components_star(spark, edges)
-        assert star == plain, f"trial {trial}"
+        local = _components(spark, edges)
+        star = _components(spark, edges, over_budget=True)
+        assert star == local, f"trial {trial}"
 
 
 def test_cc_star_chain_rounds_logarithmic(spark):
@@ -121,19 +141,57 @@ def test_cc_star_chain_rounds_logarithmic(spark):
     import math
 
     n = 64
-    edges = [(i, i + 1) for i in range(n - 1)]
-    rounds: list = []
-    got = _components_star(spark, edges, rounds_out=rounds)
+    got, rounds = _star_rounds(spark, [(i, i + 1) for i in range(n - 1)])
     assert got == {i: 0 for i in range(n)}
-    assert rounds[0] <= 2 * math.log2(n) + 2, f"took {rounds[0]} rounds"
+    assert rounds <= 2 * math.log2(n) + 2, f"took {rounds} rounds"
+
+
+def test_cc_over_budget_long_chain_exact(spark):
+    """A 120-node chain over the edge budget comes back all labelled 0:
+    the distributed path runs to its fixpoint (a 50-round propagation
+    cut-off used to return 68 of these labels wrong, silently)."""
+    got = _components(
+        spark, [(i, i + 1) for i in range(119)], over_budget=True
+    )
+    assert got == {i: 0 for i in range(120)}
 
 
 def test_cc_star_two_clusters_and_cycle(spark):
-    assert _components_star(spark, [(1, 2), (2, 3), (4, 5)]) == {
+    assert _components(spark, [(1, 2), (2, 3), (4, 5)], over_budget=True) == {
         1: 1, 2: 1, 3: 1, 4: 4, 5: 4
     }
-    got = _components_star(spark, [(1, 2), (2, 3), (3, 1), (3, 7), (7, 8)])
+    got = _components(
+        spark, [(1, 2), (2, 3), (3, 1), (3, 7), (7, 8)], over_budget=True
+    )
     assert set(got.values()) == {1} and len(got) == 5
+
+
+def test_cc_round_cap_raises(spark, monkeypatch):
+    """Hitting the round cap is an error, never unconverged labels."""
+    monkeypatch.setattr(DD, "_CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        _components(spark, [(i, i + 1) for i in range(16)], over_budget=True)
+
+
+@pytest.mark.parametrize("budget", [2, 1000])
+def test_cc_pair_upstream_runs_once(spark, budget, monkeypatch):
+    """The pair frame feeding connected_components is evaluated once
+    per row on either path (2: over the budget, 1000: union-find): a
+    Python UDF on it counts its calls."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def touch(x):
+        calls.add(1)
+        return x
+
+    edges = [(i, i + 1) for i in range(0, 20, 2)]  # 10 edges
+    prs = spark.createDataFrame(edges, "a long, b long").select(
+        F.udf(touch, "long")("a").alias("a"), "b"
+    )
+    monkeypatch.setattr(DD, "CC_LOCAL_MAX_EDGES", budget)
+    got = {r["node"]: r["component"] for r in DD.connected_components(prs).collect()}
+    assert got == {x: a for a, b in edges for x in (a, b)}
+    assert calls.value == len(edges)
 
 
 def test_split_leakage_safe_no_pair_straddles_splits(spark):

@@ -265,8 +265,8 @@ def test_bigram_lm_artifact_equals_inplan_rollup(spark):
 
 
 def _cc_iterative(pairs):
-    """The distributed min-propagation loop, forced (fallback disabled)
-    — the reference implementation the union-find path must match."""
+    """connected_components with the edge budget forced to 0: the
+    distributed large-star/small-star path the union-find must match."""
     from neural_search_spark.operators import dedup as DD
 
     with pytest.MonkeyPatch.context() as mp:
@@ -277,10 +277,12 @@ def _cc_iterative(pairs):
 
 
 def test_cc_local_fallback_equals_iterative_loop(spark):
-    """r11: the small-graph union-find fallback must emit exactly the
-    (node, component=min reachable id) relation the distributed loop
-    converges to — chains (deep diameter), stars, disjoint cliques,
-    a random graph, and the sf0.001 LSH pair fixture."""
+    """The small-graph union-find must emit exactly the (node,
+    component=min reachable id) relation of the over-budget star path —
+    chains (deep diameter), stars, disjoint cliques, a random graph
+    (with self-loops: a node linked only to itself keeps (x, x)), a
+    null endpoint (not an edge on either path), and the sf0.001 LSH
+    pair fixture."""
     import random
 
     from neural_search_spark.operators import dedup as DD
@@ -290,19 +292,21 @@ def test_cc_local_fallback_equals_iterative_loop(spark):
         "star": [(5, b) for b in range(6, 30)],
         "cliques": [(1, 2), (2, 3), (1, 3), (10, 11), (20, 21), (21, 22)],
         "reversed_chain": [(i + 1, i) for i in range(40, 60)],
+        "null_endpoint": [(1, 2), (2, None), (None, 7), (3, 8), (9, 9)],
     }
     rng = random.Random(11)
     graphs["random"] = [
         (rng.randrange(100), rng.randrange(100)) for _ in range(150)
     ]
+    assert any(a == b for a, b in graphs["random"])
     for name, edges in graphs.items():
-        prs = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in edges], "a long, b long"
-        )
+        prs = spark.createDataFrame(edges, "a long, b long")
         fallback = sorted(
             tuple(r) for r in DD.connected_components(prs).collect()
         )
         assert fallback == _cc_iterative(prs), name
+        if name == "null_endpoint":
+            assert fallback == [(1, 1), (2, 1), (3, 3), (8, 3), (9, 9)]
     # the corpus fixture (the shape every dedup consumer feeds in)
     fixture_pairs = R._lsh_pairs(spark, "/root/testdata/sf0.001")
     assert sorted(
