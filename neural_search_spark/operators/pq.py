@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import as_double, cosine, lit_vector
+from .ann import ivf_probe
 
 DEFAULT_M = 8
 DEFAULT_K = 16
@@ -296,20 +297,7 @@ def ivfpq_topk(
     (nprobe/ncells)·N·D floats; IVF-PQ reads (nprobe/ncells)·N·M bytes
     + shortlist·D floats — a further ~32× I/O cut on the probed slice.
     """
-    import math
-
-    def cos_py(a: list[float], b: list[float]) -> float:
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else 0.0
-
-    probe_ids = [
-        cid
-        for cid, _ in sorted(
-            centroids, key=lambda c: (-cos_py(query_vec, c[1]), c[0])
-        )[:nprobe]
-    ]
+    probe_ids = ivf_probe(centroids, query_vec, nprobe)
     lut = adc_lut(codebooks, query_vec)
     approx = F.lit(0).cast("long")
     for mi, row in enumerate(lut):
@@ -429,20 +417,7 @@ def ivfpq_topk_arrow(
     integer approx_dist is exact either way; probe set, shortlist
     rank and rescore are unchanged). Use when the codebooks carry
     more than a few dozen centroids per subspace."""
-    import math
-
-    def cos_py(a: list[float], b: list[float]) -> float:
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else 0.0
-
-    probe_ids = [
-        cid
-        for cid, _ in sorted(
-            centroids, key=lambda c: (-cos_py(query_vec, c[1]), c[0])
-        )[:nprobe]
-    ]
+    probe_ids = ivf_probe(centroids, query_vec, nprobe)
     short = (
         adc_scores_arrow(
             codes.where(F.col("cluster_id").isin(probe_ids)),
@@ -495,20 +470,7 @@ def ivfpq_topk_forward(
     pushed predicate. Results are identical to `ivfpq_topk_arrow`
     (same probe set, same integer ADC ranks, same cosine rescore;
     equality-tested and oracle-shared)."""
-    import math
-
-    def cos_py(a: list[float], b: list[float]) -> float:
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else 0.0
-
-    probe_ids = [
-        cid
-        for cid, _ in sorted(
-            centroids, key=lambda c: (-cos_py(query_vec, c[1]), c[0])
-        )[:nprobe]
-    ]
+    probe_ids = ivf_probe(centroids, query_vec, nprobe)
     short = (
         adc_scores_arrow(
             codes.where(F.col("cluster_id").isin(probe_ids)),

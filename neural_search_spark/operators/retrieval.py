@@ -66,9 +66,10 @@ def dense_topk(
     into the parquet scan, and `min_score` (P4, :633-636) as a
     post-similarity predicate.
     """
-    q = V.lit_vector(query_vec)
-    emb = V.as_double(F.col(vec_col))
-    sim = V.cosine(emb, q) if metric == "cosine" else -V.euclidean(emb, q)
+    if metric == "cosine":
+        sim = F.expr(V.cosine_lit_sql(vec_col, query_vec))
+    else:
+        sim = -V.euclidean(V.as_double(F.col(vec_col)), V.lit_vector(query_vec))
     out = corpus
     if pre_filter is not None:
         out = out.where(pre_filter)

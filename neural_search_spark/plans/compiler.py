@@ -100,6 +100,23 @@ def _ivf_centroids(
 
 
 @artifacts.artifact
+def _ivf_cells(spark: SparkSession, sf_dir: str, ncells: int) -> DataFrame:
+    """(vec_id, embedding, cluster_id) over the full corpus, assigned
+    to the `_ivf_centroids(ncells)` cells once and kept in memory, so an
+    IVF request only filters by its probe cells and scores."""
+    return _assign_cells(spark, sf_dir, _ivf_centroids(spark, sf_dir, ncells))
+
+
+def _assign_cells(
+    spark: SparkSession, sf_dir: str, cents: list[tuple[int, list[float]]]
+) -> DataFrame:
+    from ..operators import ann as ANN
+
+    full = _full_vectors(spark, sf_dir)
+    return full.withColumn("cluster_id", ANN.ivf_cell(cents)).persist()
+
+
+@artifacts.artifact
 def _pq_index(spark: SparkSession, sf_dir: str, codebook_k: int):
     """(codebooks, persisted codes DataFrame)."""
     from ..operators import pq as PQ
@@ -354,9 +371,17 @@ class Engine:
             dfs=getattr(bundle, "dfs", None),
         )
         if bundle.centroids:
-            _ivf_centroids.put(
-                bundle.centroids, self.spark, self.sf_dir, len(bundle.centroids)
+            ncells = len(bundle.centroids)
+            before = artifacts.peek(
+                self.sf_dir, _ivf_centroids.artifact_name, (ncells,)
             )
+            _ivf_centroids.put(bundle.centroids, self.spark, self.sf_dir, ncells)
+            if bundle.centroids != before:
+                # cells assigned to other centroids must not outlive them
+                _ivf_cells.put(
+                    _assign_cells(self.spark, self.sf_dir, bundle.centroids),
+                    self.spark, self.sf_dir, ncells,
+                )
         if bundle.pq_codebooks and bundle.pq_codes is not None:
             _pq_index.put(
                 (bundle.pq_codebooks, bundle.pq_codes),
@@ -2488,15 +2513,17 @@ class Engine:
         """`method.name` selection on a dense query — the dense analogue
         of the reference's sparse ANN method parameter
         (`sparse/query/SparseAnnQueryBuilder.java:67-87`): `ivf`
-        (partition-pruned probe) or `pq` (compressed-code ADC scan +
-        exact rescore). A pre-filter is applied to the corpus BEFORE
-        the approximate search (filter-then-search semantics, P1).
+        (probe of the pre-assigned cells) or `pq` (compressed-code ADC
+        scan + exact rescore). A pre-filter is applied BEFORE the
+        approximate search (filter-then-search semantics, P1): ivf and
+        pq semi-join their index frame to the filtered candidate ids.
 
-        Query-time cost: ivf/pq reuse the ingest artifacts (module
-        builders above) — no driver collect or k-means after the first
-        search; `lsh` needs no artifact at all (deterministic
-        hyperplanes hashed as literal expressions in the scan
-        predicate)."""
+        Query-time cost: ivf/pq only read the ingest artifacts (module
+        builders above) — no driver collect, k-means or cell assignment
+        after the first search: an ivf request filters the in-memory
+        `_ivf_cells` by its probe cells and scores them. `lsh` needs no
+        artifact at all (deterministic hyperplanes hashed as literal
+        expressions in the scan predicate)."""
         from ..operators import ann as ANN
         from ..operators import pq as PQ
 
@@ -2525,8 +2552,12 @@ class Engine:
         if method == "ivf":
             ncells = int(params.get("ncells", 16))
             nprobe = int(params.get("nprobe", 4))
+            cells = _ivf_cells(self.spark, self.sf_dir, ncells)
+            if flt is not None:
+                # filter-then-search: keep the filtered candidate ids
+                cells = cells.join(embs.select("vec_id"), "vec_id", "semi")
             cents = _ivf_centroids(self.spark, self.sf_dir, ncells)
-            return ANN.ivf_topk(embs, cents, qv, k=k, nprobe=nprobe)
+            return ANN.ivf_topk(cells, cents, qv, k=k, nprobe=nprobe)
         if method == "pq":
             shortlist = int(params.get("shortlist", max(50, 5 * k)))
             codebook_k = int(params.get("codebook_k", 64))

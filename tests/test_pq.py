@@ -78,7 +78,8 @@ def test_ivfpq_recall_and_prune(spark):
         codes, embs, books, cents, qv, k=10,
         nprobe=registry.IVFPQ_NPROBE, shortlist=100,
     )
-    ivf = ANN.ivf_topk(embs, cents, qv, k=10, nprobe=registry.IVFPQ_NPROBE)
+    assigned = embs.join(ANN.ivf_assign(embs, cents), "vec_id")
+    ivf = ANN.ivf_topk(assigned, cents, qv, k=10, nprobe=registry.IVFPQ_NPROBE)
     a = {r["doc_id"] for r in approx.collect()}
     e = {r["doc_id"] for r in ivf.collect()}
     assert len(a & e) / len(e) >= 0.9, (sorted(a), sorted(e))

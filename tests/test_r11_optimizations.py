@@ -281,8 +281,9 @@ def test_cc_local_fallback_equals_iterative_loop(spark):
     component=min reachable id) relation of the over-budget star path —
     chains (deep diameter), stars, disjoint cliques, a random graph
     (with self-loops: a node linked only to itself keeps (x, x)), a
-    null endpoint (not an edge on either path), and the sf0.001 LSH
-    pair fixture."""
+    null endpoint (not an edge on either path), an int/long pair
+    (both paths label in the wider type) and the sf0.001 LSH pair
+    fixture."""
     import random
 
     from neural_search_spark.operators import dedup as DD
@@ -307,6 +308,18 @@ def test_cc_local_fallback_equals_iterative_loop(spark):
         assert fallback == _cc_iterative(prs), name
         if name == "null_endpoint":
             assert fallback == [(1, 1), (2, 1), (3, 3), (8, 3), (9, 9)]
+    mixed = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 3_000_000_000)], "a int, b long"
+    )
+    fallback = DD.connected_components(mixed)
+    assert sorted(tuple(r) for r in fallback.collect()) == _cc_iterative(mixed)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DD, "CC_LOCAL_MAX_EDGES", 0)
+        star = DD.connected_components(mixed)
+    for out in (fallback, star):
+        assert [f.dataType.simpleString() for f in out.schema.fields] == [
+            "bigint", "bigint",
+        ]
     # the corpus fixture (the shape every dedup consumer feeds in)
     fixture_pairs = R._lsh_pairs(spark, "/root/testdata/sf0.001")
     assert sorted(

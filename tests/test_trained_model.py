@@ -100,8 +100,9 @@ def test_recall10_ivf_over_trained_embeddings(spark):
     # LSA geometry concentrates mass along the dominant eigenvector, so
     # cells separate less than for isotropic embeddings — nprobe 6/8
     # is the measured knee (4/8 → 0.7, 6/8 → 1.0, deterministic)
+    assigned = emb.join(ANN.ivf_assign(emb, cents, id_col="doc_id"), "doc_id")
     approx = ANN.ivf_topk(
-        emb, cents, qv, k=10, nprobe=6, id_col="doc_id", vec_col="embedding"
+        assigned, cents, qv, k=10, nprobe=6, id_col="doc_id", vec_col="embedding"
     )
     exact = R.dense_topk(emb, qv, k=10)
     a = {r["doc_id"] for r in approx.collect()}
