@@ -62,14 +62,14 @@ def cosine(a: Column, b: Column) -> Column:
 # (one `cosine` against a literal: ~580 measured), while one `F.expr`
 # string is parsed server-side in one call. The strings below spell the
 # trees `dot`/`cosine` build, so values are bit-identical.
-def _double_sql(x: float) -> str:
+def double_sql(x: float) -> str:
     x = float(x)
     return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
 
 
 def vector_sql(vec: list[float]) -> str:
     """A driver-side vector as an array<double> SQL literal."""
-    return "array(" + ", ".join(_double_sql(x) for x in vec) + ")"
+    return "array(" + ", ".join(double_sql(x) for x in vec) + ")"
 
 
 def dot_sql(a: str, b: str) -> str:
@@ -90,7 +90,7 @@ def cosine_lit_sql(vec_col: str, vec: list[float]) -> str:
     for x in vec:
         nv_sq = nv_sq + float(x) * float(x)
     v = "transform(`{}`, x -> CAST(x AS double))".format(vec_col.replace("`", "``"))
-    denom = f"(sqrt({dot_sql(v, v)}) * {_double_sql(math.sqrt(nv_sq))})"
+    denom = f"(sqrt({dot_sql(v, v)}) * {double_sql(math.sqrt(nv_sq))})"
     return (
         f"CASE WHEN {denom} != 0.0D"
         f" THEN {dot_sql(v, vector_sql(vec))} / {denom} END"
@@ -123,27 +123,6 @@ def dot_lit(a: Column, vec: list[float]) -> Column:
     for i, v in enumerate(vec):
         s = s + F.element_at(a, i + 1).cast("double") * F.lit(float(v))
     return s
-
-
-def l2_norm_sq_unrolled(a: Column, dim: int) -> Column:
-    """Σ a[i]² as a fixed codegen sum — same order as the dot fold."""
-    s: Column = F.lit(0.0)
-    for i in range(dim):
-        e = F.element_at(a, i + 1).cast("double")
-        s = s + e * e
-    return s
-
-
-def cosine_lit(a: Column, vec: list[float]) -> Column:
-    """cosine(a, lit_vector(vec)) with both the dot and ‖a‖ unrolled
-    (dim = len(vec)); ‖vec‖ is folded driver-side in the identical
-    sequential order (Python float == IEEE double). Bit-identical to
-    `cosine(as_double(a), lit_vector(vec))`."""
-    nv_sq = 0.0
-    for v in vec:
-        nv_sq = nv_sq + float(v) * float(v)
-    denom = F.sqrt(l2_norm_sq_unrolled(a, len(vec))) * F.lit(math.sqrt(nv_sq))
-    return F.when(denom != 0.0, dot_lit(a, vec) / denom)
 
 
 def euclidean(a: Column, b: Column) -> Column:

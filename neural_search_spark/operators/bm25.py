@@ -9,10 +9,13 @@ then the Lucene-style score expression:
     idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5))
     score  = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))
 
-Scale shape: stats tables are built once per corpus snapshot (one
-aggregation pass each) and cached; query-time work is a broadcast join
-of the query's tokens against the token-bucketed postings table, a
-groupBy(doc), and TakeOrdered top-k — no corpus-wide shuffle per query.
+Scale shape: every input of the term score is joined once per corpus
+snapshot into the scored postings (doc_id, token, tf, dl, df), which
+the engine keeps in memory (`scored_postings`). A query filters them
+with a literal `token IN (...)` predicate, scores each row with one SQL
+expression, runs a groupBy(doc) and a TakeOrdered top-k: no join or
+broadcast per query beyond a filter's candidate semi-join, and no
+corpus-wide shuffle.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.sparse import tf_postings, tokens
+from ..functions.vector import double_sql
 
 K1 = 1.2
 B = 0.75
@@ -35,11 +39,12 @@ class BM25Index:
     stats: tuple[int, float]  # (N, avgdl)
     analyzer: str | None = None  # analyzers.py name; None = whitespace default
     # term dictionary (token, df long) — Lucene stores docFreq in the
-    # term dictionary; when present, bm25_scores broadcast-joins this
-    # table instead of re-aggregating df from the postings per query
-    # (guide §2.4 remove shuffles: one fewer postings scan + exchange
-    # per match query). None → the inline per-query aggregation.
+    # term dictionary. None → `term_dictionary(postings)`.
     dfs: DataFrame | None = None
+    # `scored_postings` of this index, persisted by its owner (the
+    # engine keeps one per corpus and analyzer). None → bm25_scores
+    # joins them lazily per query.
+    scored: DataFrame | None = None
 
 
 def build_bm25(
@@ -51,6 +56,22 @@ def build_bm25(
     """`analyzer` selects a functions/analyzers.py tokenizer for the
     postings AND is recorded on the index so query tokenization always
     matches document tokenization (Lucene's index-analyzer contract)."""
+    postings, doclen = index_frames(docs, id_col, text_col, analyzer)
+    n, avgdl = doclen.agg(F.count("*"), F.avg("dl")).first()
+    return BM25Index(
+        postings=postings, doclen=doclen, stats=(int(n), float(avgdl)),
+        analyzer=analyzer,
+    )
+
+
+def index_frames(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    analyzer: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The lazy (postings (id, token, tf double), doclen (id, dl
+    double)) frames of `docs` under `analyzer`; no Spark job."""
     postings = tf_postings(docs, id_col, text_col, analyzer=analyzer).withColumnRenamed(
         "weight", "tf"
     )
@@ -61,11 +82,32 @@ def build_bm25(
 
         toks = analyze(F.col(text_col), analyzer)
     doclen = docs.select(F.col(id_col), F.size(toks).cast("double").alias("dl"))
-    n, avgdl = doclen.agg(F.count("*"), F.avg("dl")).first()
-    return BM25Index(
-        postings=postings, doclen=doclen, stats=(int(n), float(avgdl)),
-        analyzer=analyzer,
-    )
+    return postings, doclen
+
+
+def term_dictionary(postings: DataFrame) -> DataFrame:
+    """(token, df long): docFreq per token. count(*) over the
+    (doc, token)-unique postings == countDistinct(doc)."""
+    return postings.groupBy("token").agg(F.count("*").alias("df"))
+
+
+def scored_postings(
+    postings: DataFrame,
+    doclen: DataFrame,
+    dfs: DataFrame | None = None,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """(id, token, tf, dl, df double): each posting joined to its doc
+    length and its term's docFreq — every per-row input of the BM25
+    term score. Both joins broadcast the small side, so the postings
+    keep their partitioning and row order, and per-doc sums their
+    order. Without a term dictionary df is counted from the postings;
+    a token filter above this frame is inferred into that count."""
+    if dfs is None:
+        dfs = term_dictionary(postings)
+    return postings.join(
+        F.broadcast(dfs.select("token", F.col("df").cast("double").alias("df"))), "token"
+    ).join(F.broadcast(doclen), id_col)
 
 
 def bm25_scores(
@@ -84,7 +126,16 @@ def bm25_scores(
     corpus-wide, as in Lucene filtered queries. `search_analyzer`
     overrides the index analyzer for QUERY tokenization only (the
     OpenSearch mapping `search_analyzer` contract — e.g. edge_ngram
-    index + standard search for search-as-you-type)."""
+    index + standard search for search-as-you-type).
+
+    Reads the index's scored postings (`scored_postings`) through a
+    literal `token IN (...)` filter: no per-query join and no
+    broadcast, each of which would run a Spark job of its own. The
+    term score is one SQL expression with the operation order of
+    idf · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl)), k1 + 1 and 1 - b
+    folded driver-side."""
+    from .retrieval import token_in_sql
+
     n, avgdl = index.stats
     qa = search_analyzer or index.analyzer
     if qa is None:
@@ -93,43 +144,21 @@ def bm25_scores(
         from ..functions.analyzers import analyze_py
 
         qtokens = sorted(set(analyze_py(query, qa)))
-    spark = index.postings.sparkSession
-    from .retrieval import token_frame
-
-    q = token_frame(spark, dict.fromkeys(qtokens, 1.0)).select("token")
-
-    postings = index.postings
+    scored = index.scored
+    if scored is None:
+        scored = scored_postings(index.postings, index.doclen, index.dfs, id_col)
     if candidate_ids is not None:
-        postings = postings.join(F.broadcast(candidate_ids.select(id_col)), id_col, "semi")
-    if index.dfs is not None:
-        # term dictionary artifact: df comes from a broadcast join of
-        # the query's tokens against the (token, df) table — no
-        # per-query postings scan. count(*) over the (doc, token)-unique
-        # postings == docFreq, so values are identical to the inline agg.
-        df_tbl = index.dfs.join(F.broadcast(q), "token").select(
-            "token", F.col("df").cast("double").alias("df")
-        )
-    else:
-        df_tbl = (
-            index.postings.join(F.broadcast(q), "token")
-            .groupBy("token")
-            .agg(F.count("*").cast("double").alias("df"))
-        )
-    idf = F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    scored = (
-        postings.join(F.broadcast(q), "token")
-        .join(F.broadcast(df_tbl), "token")
-        .join(index.doclen, id_col)
-        .withColumn(
-            "term_score",
-            idf
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))),
-        )
-        .groupBy(id_col)
-        .agg(F.sum("term_score").alias("score"))
+        scored = scored.join(F.broadcast(candidate_ids.select(id_col)), id_col, "semi")
+    d = double_sql
+    term = (
+        f"ln(1.0D + ({d(n)} - df + 0.5D) / (df + 0.5D)) * (tf * {d(k1 + 1.0)})"
+        f" / (tf + {d(k1)} * ({d(1.0 - b)} + {d(b)} * dl / {d(avgdl)}))"
     )
-    return scored
+    return (
+        scored.where(F.expr(token_in_sql(qtokens)))
+        .groupBy(id_col)
+        .agg(F.expr(f"sum({term})").alias("score"))
+    )
 
 
 def bm25_topk(

@@ -29,11 +29,13 @@ def _topk(df: DataFrame, k: int, score_col: str = "score", id_col: str = "doc_id
 
 
 def token_frame(spark, tokens: dict[str, float]) -> DataFrame:
-    """(token, qw) as a literal LocalRelation — `F.inline` over literal
-    structs, NOT `createDataFrame` (which round-trips a Python RDD:
-    an extra Python-worker scan stage and a slower broadcast on a real
-    cluster; inference hoisting should put the query's tokens straight
-    into the plan, like lit_vector does for dense)."""
+    """(token, qw) rows built from literal structs with `F.inline`, NOT
+    `createDataFrame` (which round-trips a Python RDD: an extra
+    Python-worker scan stage). Its plan is `Range (0, 1, splits=<cores>)`
+    under a `Generate inline`, not a LocalRelation, and broadcasting it
+    runs a Spark job (so does broadcasting a `VALUES` LocalRelation).
+    A query that only needs to restrict a frame to its tokens filters
+    with `token_in_sql` instead, which runs none."""
     return spark.range(1).select(
         F.inline(
             F.array(
@@ -47,6 +49,35 @@ def token_frame(spark, tokens: dict[str, float]) -> DataFrame:
         )
     )
 
+
+def sql_string(s: str) -> str:
+    """`s` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def token_in_sql(tokens) -> str:
+    """`token IN (...)` over literal strings (FALSE for no tokens): a
+    filter inside the scan of the frame it restricts."""
+    if not tokens:
+        return "FALSE"
+    return "token IN (" + ", ".join(sql_string(t) for t in tokens) + ")"
+
+
+def _weighted_scores(
+    postings: DataFrame, query_tokens: dict[str, float], id_col: str
+) -> DataFrame:
+    """(id, score = Σ weight · q_w(token)) over the postings of the
+    query's tokens: the token filter and the weights (one literal map)
+    in SQL text, one parse each instead of a Column tree per token."""
+    qw = "0.0D"  # no tokens: no rows pass the filter
+    if query_tokens:
+        pairs = (f"{sql_string(t)}, {V.double_sql(w)}" for t, w in query_tokens.items())
+        qw = f"map({', '.join(pairs)})[token]"
+    return (
+        postings.where(F.expr(token_in_sql(query_tokens)))
+        .groupBy(id_col)
+        .agg(F.expr(f"sum(weight * {qw})").alias("score"))
+    )
 
 
 def dense_topk(
@@ -158,23 +189,16 @@ def sparse_topk_postings(
     FeatureField linear disjunction
     (`query/NeuralSparseQueryBuilder.java:569-590`).
 
-    Scale shape: the query's token list is a tiny literal DataFrame that
-    broadcast-joins the postings table on `token`; with the postings
-    table bucketed/partitioned by token this reads only matching
-    postings (inverted-index access), then one partial-aggregated
-    groupBy(doc) and a TakeOrdered top-k.
+    Scale shape: a literal `token IN (...)` filter reads only the
+    matching postings (with the postings table partitioned and sorted
+    by token, only their row groups or cached batches), then one
+    partial-aggregated groupBy(doc) and a TakeOrdered top-k.
     """
-    q = token_frame(postings.sparkSession, query_tokens)
     if candidate_ids is not None:
         # P2 hybrid filter pushdown: restrict postings to allowed docs
         # BEFORE scoring (`query/HybridQueryBuilder.java:117-128`)
         postings = postings.join(F.broadcast(candidate_ids.select(id_col)), id_col, "semi")
-    scored = (
-        postings.join(F.broadcast(q), "token")
-        .groupBy(id_col)
-        .agg(F.sum(F.col("weight") * F.col("qw")).alias("score"))
-    )
-    return _topk(scored, k, id_col=id_col)
+    return _topk(_weighted_scores(postings, query_tokens, id_col), k, id_col=id_col)
 
 
 def two_phase_sparse(
@@ -203,14 +227,8 @@ def two_phase_sparse(
     window = min(int(k * expansion_rate), max_window)
     phase1 = sparse_topk_postings(postings, high, k=window, id_col=id_col).select(id_col)
     # rescore ONLY the window with the full token map
-    q = token_frame(postings.sparkSession, query_tokens)
-    rescored = (
-        postings.join(F.broadcast(phase1), id_col)
-        .join(F.broadcast(q), "token")
-        .groupBy(id_col)
-        .agg(F.sum(F.col("weight") * F.col("qw")).alias("score"))
-    )
-    return _topk(rescored, k, id_col=id_col)
+    window_postings = postings.join(F.broadcast(phase1), id_col)
+    return _topk(_weighted_scores(window_postings, query_tokens, id_col), k, id_col=id_col)
 
 
 def dense_rescore_topk(

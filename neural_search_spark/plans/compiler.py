@@ -56,7 +56,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import artifacts, catalog, models
-from ..functions import sparse as S
 from ..operators import bm25 as B
 from ..operators import fusion as FU
 from ..operators import highlight as H
@@ -85,10 +84,22 @@ DEFAULT_K = R.DEFAULT_K
 # training. They are always built over the FULL corpus (an index
 # describes the whole table); per-query filters prune the candidate
 # scan, not the artifact.
+@artifacts.artifact
 def _full_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return catalog.corpus(spark, sf_dir).select(
-        F.col("doc_id").alias("vec_id"), "embedding"
+    """(vec_id, embedding) of every document with a vector, kept in
+    memory: unfiltered brute-force search scans it, and the IVF cells
+    and PQ codebooks are built from it."""
+    return (
+        catalog.corpus(spark, sf_dir)
+        .select(F.col("doc_id").alias("vec_id"), "embedding")
+        .persist()
     )
+
+
+# The lexical artifact: `B.scored_postings` of the corpus under one
+# analyzer, kept in memory (nothing on disk). `match` and
+# `neural_sparse` requests only filter it by their tokens and score.
+_SCORED_POSTINGS = "compiler.scored_postings"
 
 
 @artifacts.artifact
@@ -277,8 +288,24 @@ class Engine:
         if self._bm25 is None:
             self._bm25 = {}
         if analyzer not in self._bm25:
-            self._bm25[analyzer] = B.build_bm25(self.documents(), analyzer=analyzer)
+            idx = B.build_bm25(self.documents(), analyzer=analyzer)
+            idx.scored = self.scored_postings(analyzer)
+            self._bm25[analyzer] = idx
         return self._bm25[analyzer]
+
+    def scored_postings(self, analyzer: str | None = None) -> DataFrame:
+        """(doc_id, token, tf, dl, df double) of this corpus under
+        `analyzer` (`B.scored_postings`): one persisted artifact per
+        (corpus, analyzer), the bundle's once `attach_index` put it,
+        else built from this engine's documents. Runs no Spark job."""
+
+        def build() -> DataFrame:
+            postings, doclen = B.index_frames(self.documents(), analyzer=analyzer)
+            return B.scored_postings(postings, doclen).persist()
+
+        return artifacts.lookup(
+            self.spark, self.sf_dir, _SCORED_POSTINGS, (analyzer,), build
+        )
 
     # derived text fields — the S3 mapping-transformer face of the DSL:
     # a "field" a query addresses need not be a physical column; `title`
@@ -363,13 +390,21 @@ class Engine:
         the first ANN query after a restart is as cheap as the Nth."""
         if self._bm25 is None:
             self._bm25 = {}
-        self._bm25[bundle.analyzer] = B.BM25Index(
+        idx = B.BM25Index(
             postings=bundle.postings,
             doclen=bundle.doclen,
             stats=bundle.stats,
             analyzer=bundle.analyzer,
             dfs=getattr(bundle, "dfs", None),
         )
+        idx.scored = B.scored_postings(idx.postings, idx.doclen, idx.dfs)
+        artifacts.put(
+            self.spark, self.sf_dir, _SCORED_POSTINGS, (bundle.analyzer,), idx.scored
+        )
+        # after the put: it unpersists the frame it replaces, and the
+        # cache matches frames by plan, so an equal plan would go too
+        idx.scored.persist()
+        self._bm25[bundle.analyzer] = idx
         if bundle.centroids:
             ncells = len(bundle.centroids)
             before = artifacts.peek(
@@ -422,6 +457,10 @@ class Engine:
             self._stored_dim = _corpus_dim(self.spark, self.sf_dir)
         return self._stored_dim
 
+    def _in_stored_space(self, model_id: str) -> bool:
+        """The stored embedding column is in `model_id`'s vector space."""
+        return models.MODEL_REGISTRY[model_id].dim == self._corpus_dim()
+
     def model_corpus(self, model_id: str) -> DataFrame:
         """Corpus whose embedding column lives in `model_id`'s vector
         space. When the model's dim matches the index's stored dim the
@@ -441,9 +480,9 @@ class Engine:
         build — correctness unchanged. The artifact store keeps it per
         (corpus, model, weights fingerprint) through the same lookup as
         the decorated builders: its input is this engine's `documents()`."""
-        spec = models.MODEL_REGISTRY[model_id]
-        if spec.dim == self._corpus_dim():
+        if self._in_stored_space(model_id):
             return self.corpus()
+        spec = models.MODEL_REGISTRY[model_id]
 
         def _load_or_build() -> DataFrame:
             from ..sources import index_store as IS
@@ -589,11 +628,22 @@ class Engine:
                         "rescore search, which re-embeds in-plan"
                     )
                 return self._ann_topk(method, body.get("method") or {}, qv, k, flt)
+            vec_col = body.get("field", "embedding")
+            if vec_col == "embedding" and (
+                not used_model or self._in_stored_space(model_id)
+            ):
+                # brute force over the in-memory vectors; a filter
+                # keeps its candidate ids, as the IVF probe does
+                vecs = _full_vectors(self.spark, self.sf_dir)
+                if flt is not None:
+                    ids = self.corpus().where(flt).select(F.col("doc_id").alias("vec_id"))
+                    vecs = vecs.join(ids, "vec_id", "semi")
+                corp_base, flt = vecs.withColumnRenamed("vec_id", "doc_id"), None
             return R.dense_topk(
                 corp_base,
                 qv,
                 k=k,
-                vec_col=body.get("field", "embedding"),
+                vec_col=vec_col,
                 pre_filter=flt,
                 min_score=body.get("min_score"),
             )
@@ -656,7 +706,9 @@ class Engine:
                     "doc_id", "chunk_idx", score.alias("score")
                 )
                 return R.chunk_max_topk(chunk_scores, k=k)
-            postings = S.tf_postings(self.documents(), analyzer=sparse_analyzer)
+            postings = self.scored_postings(sparse_analyzer).select(
+                "doc_id", "token", F.col("tf").alias("weight")
+            )
             method = (body.get("method") or {})
             if method.get("name") == "seismic":
                 # R7 sparse ANN method dispatch

@@ -67,8 +67,8 @@ class IndexBundle:
     chunk_doclen: DataFrame | None = None  # (child_id, dl)
     chunk_stats: "tuple[int, float] | None" = None  # (N_children, avgdl)
     # term dictionaries (token, df long) — Lucene's docFreq lives in
-    # the term dictionary; persisting it saves every match query one
-    # postings scan + aggregation (guide §2.4)
+    # the term dictionary; persisting it saves a postings aggregation
+    # when the engine joins its scored postings (guide §2.4)
     dfs: DataFrame | None = None
     chunk_dfs: DataFrame | None = None
 
@@ -100,12 +100,10 @@ def save_index(
         .parquet(os.path.join(path, "postings"))
     )
     idx.doclen.write.mode("overwrite").parquet(os.path.join(path, "doclen"))
-    # term dictionary: docFreq per token (count(*) == countDistinct(doc)
-    # on the (doc, token)-unique postings). |V| rows — KBs next to the
-    # postings; read once per query instead of re-aggregated.
+    # term dictionary: docFreq per token. |V| rows — KBs next to the
+    # postings; joined into the engine's scored postings once per load.
     (
-        idx.postings.groupBy("token")
-        .agg(F.count("*").alias("df"))
+        B.term_dictionary(idx.postings)
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(os.path.join(path, "dfs"))
@@ -161,8 +159,7 @@ def save_index(
             os.path.join(path, "chunk_doclen")
         )
         (
-            cidx.postings.groupBy("token")
-            .agg(F.count("*").alias("df"))
+            B.term_dictionary(cidx.postings)
             .coalesce(1)
             .write.mode("overwrite")
             .parquet(os.path.join(path, "chunk_dfs"))

@@ -6,10 +6,12 @@ calls it takes today, so a construction regression shows up here as a
 count before it shows up as a slower run.
 
 Measured at sf0.001 (warm engine, a second request of each kind):
-neural (vector or text) 92, neural ivf 197, neural_sparse 412, match
-549, hybrid 1368, hybrid rrf 1128. Before the IVF cells artifact and
-the one-string cosine: neural 674, neural ivf 10255, hybrid 1950,
-hybrid rrf 1710."""
+neural (vector or text) 95, neural ivf 197, neural_sparse 119, match
+79, hybrid 901, hybrid rrf 661. Before the scored-postings artifact
+and the one-string BM25 term score and sparse weights: neural 92,
+neural_sparse 412, match 549, hybrid 1368, hybrid rrf 1128. Before the
+IVF cells artifact and the one-string cosine: neural 674, neural ivf
+10255, hybrid 1950, hybrid rrf 1710."""
 
 from __future__ import annotations
 
@@ -24,10 +26,10 @@ BUDGETS = {
     "neural_vector": 140,
     "neural_text": 140,
     "neural_ivf": 300,
-    "neural_sparse": 620,
-    "match": 830,
-    "hybrid": 2060,
-    "hybrid_rrf": 1700,
+    "neural_sparse": 180,
+    "match": 120,
+    "hybrid": 1350,
+    "hybrid_rrf": 990,
 }
 
 

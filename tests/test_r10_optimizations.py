@@ -15,9 +15,9 @@ from neural_search_spark.operators.cluster import _list_col_matrix
 
 
 def test_bm25_dfs_artifact_matches_inline_aggregation(spark, sf_dir):
-    """The term-dictionary artifact path (index.dfs broadcast join)
-    must produce byte-identical scores to the inline per-query df
-    aggregation it replaced (same docFreq values → same idf)."""
+    """The term-dictionary artifact (index.dfs) must produce
+    byte-identical scores to df counted from the postings, the path
+    an index without one takes (same docFreq values → same idf)."""
     idx = registry._bm25(spark, sf_dir)
     assert idx.dfs is not None
     with_dfs = B.bm25_topk(idx, registry.BM25_QUERY, k=25).collect()

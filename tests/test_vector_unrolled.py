@@ -1,8 +1,8 @@
-"""Unrolled codegen vector expressions vs the HOF folds — bit
-identity, not approximate equality: dot_lit/cosine_lit keep the
-fold's exact summation order, so swapping them in can never move a
-hash-matched oracle. Plus the Arrow IVF assigner vs the expression
-form."""
+"""Literal-vector expressions vs the HOF folds — bit identity, not
+approximate equality: the unrolled dot_lit and the one-string
+cosine_lit_sql keep the fold's exact summation order, so swapping them
+in can never move a hash-matched oracle. Plus the Arrow IVF assigner
+vs the expression form."""
 
 import math
 import random
@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from neural_search_spark.functions.vector import (
     as_double,
     cosine,
-    cosine_lit,
+    cosine_lit_sql,
     dot,
     dot_lit,
     lit_vector,
@@ -51,10 +51,10 @@ def test_cosine_lit_bit_identical_and_null_guard(spark):
     out = df.select(
         "vec_id",
         cosine(as_double(F.col("embedding")), lit_vector(q)).alias("fold"),
-        cosine_lit(F.col("embedding"), q).alias("unrolled"),
+        F.expr(cosine_lit_sql("embedding", q)).alias("sql"),
     ).collect()
     for r in out:
-        assert r["fold"] == r["unrolled"], r["vec_id"]
+        assert r["fold"] == r["sql"], r["vec_id"]
     # the zero vector hits the 0-denominator guard on both forms
     assert [r["fold"] for r in out if r["vec_id"] == 200] == [None]
 
@@ -63,7 +63,7 @@ def test_cosine_lit_zero_query_is_null(spark):
     df = spark.createDataFrame(
         _vecs(5), "vec_id long, embedding array<double>"
     )
-    out = df.select(cosine_lit(F.col("embedding"), [0.0] * DIM).alias("c"))
+    out = df.select(F.expr(cosine_lit_sql("embedding", [0.0] * DIM)).alias("c"))
     assert [r["c"] for r in out.collect()] == [None] * 5
 
 
@@ -73,9 +73,34 @@ def test_unrolled_is_codegen_not_interpreted(spark):
     df = spark.createDataFrame(_vecs(5), "vec_id long, embedding array<double>")
     q = [0.1] * DIM
     plan = df.select(
-        cosine_lit(F.col("embedding"), q).alias("c")
+        dot_lit(F.col("embedding"), q).alias("c")
     )._jdf.queryExecution().executedPlan().toString()
     assert "aggregate(" not in plan and "zip_with(" not in plan
+
+
+def test_cosine_lit_sql_builds_in_constant_round_trips(spark):
+    """The point of the SQL form: the cosine (its folds interpreted,
+    like `cosine`) is parsed JVM-side from one string, so building it
+    costs the same few py4j commands at any dim, where the Column
+    form sends commands per node."""
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    calls = []
+
+    def counting(command, *args, **kwargs):
+        calls.append(command)
+        return real(command, *args, **kwargs)
+
+    counts = []
+    for dim in (4, DIM):
+        calls.clear()
+        client.send_command = counting
+        try:
+            F.expr(cosine_lit_sql("embedding", [0.1] * dim))
+        finally:
+            del client.send_command
+        counts.append(len(calls))
+    assert counts[0] == counts[1] <= 4, counts
 
 
 def test_ivf_assign_arrow_matches_expression_form(spark):
@@ -99,7 +124,7 @@ def test_ivf_assign_arrow_matches_expression_form(spark):
 
 
 def test_unrolled_norm_matches_python_fold():
-    # the driver-side ‖vec‖ fold in cosine_lit is the same sequential
+    # the driver-side ‖vec‖ fold in cosine_lit_sql is the same sequential
     # order as l2_norm's aggregate — spot-check the Python replica
     vec = [0.1 * i for i in range(DIM)]
     s = 0.0
