@@ -272,10 +272,9 @@ def lsh_bucketed_neardup(
     is the bucket hash for the self-join.
 
     The plane-sign bits are assembled as ONE SQL expression string
-    (r10 batch 3 — the same single-parse pattern as
-    lsh_multitable_neardup_blocked): the Column-per-plane loop cost
-    ~0.8 s of driver py4j time per query at 8 planes × 64 dims.
-    Identical fold, identical bits."""
+    (r10 batch 3 — the single-parse pattern of lsh_topk): the
+    Column-per-plane loop cost ~0.8 s of driver py4j time per query at
+    8 planes × 64 dims. Identical fold, identical bits."""
     from ..functions.common import let
 
     v = as_double(F.col(vec_col))
@@ -379,241 +378,177 @@ def lsh_multitable_neardup_blocked(
     vec_col: str = "embedding",
     max_block_rows: int | None = None,
 ) -> DataFrame:
-    """`lsh_multitable_neardup` with BLOCK-LOCAL scoring: candidate
-    semantics are identical (OR over n_tables SRP hash tables,
-    equivalence-tested), but instead of materializing candidate pairs
-    and evaluating an interpreted 64-term fold per pair, each (table,
-    bucket) group scores ALL its within-bucket pairs in one vectorized
-    numpy pass via `applyInPandas` — the dominant cost drops from
-    per-pair expression interpretation to a dense rank-1-update loop.
+    """`lsh_multitable_neardup` with BLOCK-LOCAL scoring: the same
+    candidate semantics (OR over n_tables SRP hash tables,
+    equivalence-tested) and bit-identical cosines, computed by two
+    `mapInArrow` kernels instead of per-pair expressions.
 
-    Float parity with the SQL oracle is preserved by construction:
-    the pair score accumulates SEQUENTIALLY over dimensions
-    (S += u[:,i]⊗u[:,i], i in order), the same association as the
-    `aggregate(zip_with(...))` left fold and DuckDB's
-    list_dot_product; unit vectors divide element-wise after a
-    sequential sum of squares, mirroring `_SQL_UNIT`.
+    1. Layout kernel over (id, vector): per Arrow batch, every T×P
+       plane dot in one dimension-sequential fold (acc += x_i·p_i, i in
+       order — `dot_sql`'s association, so each sign bit equals the
+       SQL's), each table's P bits packed into an integer bucket id, and
+       the unit vector once per row (sequential sum of squares, then an
+       element-wise divide, mirroring `_SQL_UNIT`). Emits
+       (id, table, bucket, unit), checkpointed once for the grid.
+    2. Grid, one path for every bucket: `max_block_rows` (B) is the
+       hot-bucket skew guard. A groupBy aggregation group is atomic —
+       one task, an n×n score matrix, no help from AQE — so a viral
+       template duplicated millions of times would pin one executor.
+       Each bucket of cnt rows is cut into ⌈cnt/B⌉ hash-assigned blocks
+       (xxhash64(id) mod nblocks: B rows IN EXPECTATION, no window pass
+       that would serialize the hot bucket) and every block-grid cell
+       (bn_a ≤ bn_b) scores only its ~B×B pairs. A bucket with cnt ≤ B
+       is one diagonal cell; B=None makes every bucket one cell.
+    3. Score kernel over the cells, clustered and sorted by
+       (table, bucket, bn_a, bn_b): it walks the contiguous key runs
+       (a run may straddle Arrow batches) and scores each with the
+       sequential fold S += u_i ⊗ u_i — the upper triangle of a
+       diagonal cell, A×B off the diagonal. One (a, b) dedup follows:
+       a pair can collide in several tables.
 
-    Scale shape: ONE shuffle (the groupBy on (table, bucket)); each
-    task holds one bucket's vectors — the block size is controlled by
-    n_planes exactly like the expression variant.
-
-    `max_block_rows`: hot-bucket skew guard. N-scaled planes keep the
-    EXPECTED bucket size constant, but a degenerate corpus (one viral
-    template duplicated millions of times) still lands one giant
-    bucket, and a groupBy group is atomic — one task, an n×n score
-    matrix, no help from AQE (skew-join splitting applies to joins,
-    not aggregation groups). With max_block_rows set, each oversized
-    bucket is cut into hash-assigned blocks of that many rows IN
-    EXPECTATION (xxhash64(id) mod nblocks — no window pass anywhere,
-    so not even the counting serializes the hot bucket) and every
-    block-grid cell (bi ≤ bj) becomes its own task scoring only its
-    ~B×B cross pairs. The pair SET and every cosine are bit-identical
-    to the unblocked path (same per-pair dimension-sequential fold;
-    coverage is assignment-independent); total work is the same
-    Σ|bucket|² — the grid bounds per-task memory to ~B² and spreads
-    the hot bucket across the cluster instead of pinning one executor.
+    Bucket sizes come from a groupBy count shuffle-joined back on
+    (table, bucket): its partial aggregation counts even the hot bucket
+    distributed, where a window count would route it through one task.
+    Pair coverage is assignment-independent — rows x (block i) and
+    y (block j, i ≤ j) meet in exactly cell (i, j): x replicates as A
+    to (i, k ≥ i) and as B to (k < i, i), ONE explode with ~nblocks
+    copies per row, never nblocks² — so the pair set and every cosine
+    are bit-identical at any B (equivalence-tested at B ∈ {1, 7, 10⁴});
+    total work stays Σ|bucket|², per-task memory ~B².
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    # all T×P hyperplane signs assembled as ONE SQL expression string:
-    # one parse server-side instead of thousands of py4j Column calls
-    # (the lsh_topk lesson — plan construction, not execution, is the
-    # driver-side cost of literal-heavy expressions). NOTE: unrolling
-    # each plane dot to an element_at sum (the SEISMIC pass-1 lesson)
-    # was MEASURED here and reverted — 32 planes × 64 dims = 2048
-    # multiply-adds in one projection blows past the codegen method
-    # budget and lands on the interpreted expression TREE, 2.4× slower
-    # than the fold (sf0.1 local[8]: direct 2.1 → 5.1 s); the lesson
-    # applies to ≤ a few dozen unrolled terms, not thousands.
-    tables_sql = []
-    for t in range(n_tables):
-        bits = ", ".join(
-            f"CASE WHEN {dot_sql('__v', vector_sql(plane))} >= 0.0D THEN '1' ELSE '0' END"
-            for plane in _srp_planes(dim, n_planes, seed=f"srp{t}")
-        )
-        tables_sql.append(f"concat({bits})")
-    buckets_sql = "array(" + ", ".join(tables_sql) + ")"
-    laid = embs.select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("__v")
-    ).select(
-        F.col(id_col),
-        "__v",
-        F.posexplode(F.expr(buckets_sql)).alias("table", "bucket"),
+    from .cluster import _list_col_matrix
+
+    T, P = n_tables, n_planes
+    if P > 63:
+        raise ValueError(f"n_planes={P}: a bucket id packs at most 63 plane bits")
+    planes = np.array(
+        [p for t in range(T) for p in _srp_planes(dim, P, seed=f"srp{t}")]
+    )  # (T·P, dim), table-major
+    weights = np.left_shift(1, np.arange(P - 1, -1, -1, dtype=np.int64))
+
+    def layout(batches):
+        for b in batches:
+            n = b.num_rows
+            if not n:
+                continue
+            X = _list_col_matrix(np, b.column(1))
+            acc = np.zeros((n, len(planes)))
+            norm2 = np.zeros(n)
+            for i in range(dim):  # sequential dims = the SQL fold
+                acc = acc + X[:, i, None] * planes[None, :, i]
+                norm2 = norm2 + X[:, i] * X[:, i]
+            bits = (acc >= 0.0) | np.isnan(acc)  # Spark orders NaN above 0
+            bucket = (bits.reshape(n, T, P) * weights).sum(axis=2)
+            U = np.repeat(X / np.sqrt(norm2)[:, None], T, axis=0)
+            yield pa.record_batch({
+                "id": pa.array(np.repeat(b.column(0).to_numpy(), T), pa.int64()),
+                "table": pa.array(np.tile(np.arange(T, dtype=np.int32), n)),
+                "bucket": pa.array(bucket.reshape(-1)),
+                "unit": pa.ListArray.from_arrays(
+                    pa.array(np.arange(0, U.size + 1, dim, dtype=np.int32)),
+                    pa.array(U.reshape(-1)),
+                ),
+            })
+
+    laid = embs.select(id_col, vec_col).mapInArrow(
+        layout, "id long, table int, bucket long, unit array<double>"
     )
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        empty = pd.DataFrame({"a": pd.Series([], dtype="int64"),
-                              "b": pd.Series([], dtype="int64"),
-                              "cosine": pd.Series([], dtype="float64")})
-        if n < 2:
-            return empty
-        ids = pdf[id_col].to_numpy()
-        E = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["__v"]])
-        norm2 = np.zeros(n)
-        for i in range(E.shape[1]):  # sequential dims = the SQL fold
-            norm2 = norm2 + E[:, i] * E[:, i]
-        U = E / np.sqrt(norm2)[:, None]
-        S = np.zeros((n, n))
-        for i in range(U.shape[1]):
-            S = S + U[:, i, None] * U[None, :, i]
-        iu, ju = np.triu_indices(n, 1)
-        cos = S[iu, ju]
-        mask = cos >= threshold
-        if not mask.any():
-            return empty
-        a_ids, b_ids = ids[iu[mask]], ids[ju[mask]]
-        lo = np.minimum(a_ids, b_ids)
-        hi = np.maximum(a_ids, b_ids)
-        return pd.DataFrame({"a": lo, "b": hi, "cosine": cos[mask]})
-
     if max_block_rows is None:
-        return (
-            laid.groupBy("table", "bucket")
-            .applyInPandas(score_bucket, "a long, b long, cosine double")
-            .dropDuplicates(["a", "b"])
+        nblocks = F.lit(1)
+    else:
+        # the size count and the join probe both read the bucketed frame:
+        # checkpoint it so the plane fold runs once per execution
+        laid = laid.localCheckpoint(eager=True)
+        sizes = laid.groupBy("table", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
+        laid = laid.join(sizes, ["table", "bucket"])
+        nblocks = (
+            ((F.col("cnt") - F.lit(1)) / F.lit(max_block_rows)).cast("int")
+            + F.lit(1)
         )
-
-    # Materialize the bucketed frame ONCE before the grid split
-    # (optimization r10): the size aggregation, the tagged join probe,
-    # the small-bucket branch and the grid cells otherwise each re-run
-    # the T×P hyperplane-sign pass over the corpus (8 parquet scans in
-    # the measured plan — the SRP fold is the expensive part). Guide
-    # §8's "compute the fingerprint once", in-process: checkpointed
-    # per query execution, never cached across runs; at 100 TB this
-    # frame is the bucketing job's scratch output.
-    laid = laid.localCheckpoint(eager=True)
-
-    # --- hot-bucket grid path, gated on OBSERVED bucket size -------------
-    # Bucket sizes come from a groupBy count (map-side partial agg —
-    # even the hot bucket's count is computed DISTRIBUTED) shuffle-
-    # joined back on (table, bucket). NOT broadcast: the size frame has
-    # one row per non-empty bucket, which at N-scaled plane counts
-    # grows with the corpus — not broadcastable at 100 TB. NOT a window
-    # count (the round-6 shape): Window.partitionBy(table, bucket)
-    # routes every row of the hot bucket through ONE task just to
-    # count it — reintroducing the single-task hotspot this path
-    # exists to avoid — whereas a shuffle join's probe side streams
-    # and AQE can skew-split it.
-    #
-    # Block assignment is HASH-based (xxhash64(id) mod nblocks), not
-    # row_number — a row_number window is, again, one serialized task
-    # per hot bucket. Hash blocks hit max_block_rows in EXPECTATION
-    # (binomial around the target), bounding per-cell memory
-    # statistically rather than exactly: the right trade at 100 TB,
-    # where the window's guaranteed bound costs a buffered pass over
-    # the very bucket that is too big for one task. Pair coverage is
-    # assignment-independent — rows x (block i) and y (block j, i ≤ j)
-    # meet in exactly cell (i, j): x replicates as A to (i, k ≥ i) and
-    # as B to (k < i, i) — and every cosine is the same row-local
-    # dimension-sequential fold, so the output pair set is
-    # bit-identical to the row_number version (equivalence-tested at
-    # B ∈ {4, 16, 100000}).
-    #
-    # Cell replication is ONE explode, not joins: with cnt and bn in
-    # hand, a row derives its own grid cells — the earlier 3-consumer
-    # shape (grid frame + rows_a/rows_b equi-joins) re-computed the
-    # bucket-hash scan three times and measured ~30-50% no-op
-    # overhead. Replication is ~nb copies per row, never nb², and the
-    # (table, bucket, bn_a, bn_b) shuffle spreads cells across the
-    # cluster.
-    sizes = laid.groupBy("table", "bucket").agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
-    tagged = laid.join(sizes, ["table", "bucket"])
-    small = tagged.where(F.col("__cnt") <= max_block_rows).drop("__cnt")
-    small_pairs = small.groupBy("table", "bucket").applyInPandas(
-        score_bucket, "a long, b long, cosine double"
-    )
-
-    nblocks = (
-        ((F.col("__cnt") - F.lit(1)) / F.lit(max_block_rows)).cast("int")
-        + F.lit(1)
-    )
-    blocked = (
-        tagged.where(F.col("__cnt") > max_block_rows)
-        .withColumn(
-            "bn", F.pmod(F.xxhash64(F.col(id_col)), nblocks).cast("int")
-        )
+    keys = ["table", "bucket", "bn_a", "bn_b"]
+    cells = (
+        laid.withColumn("bn", F.pmod(F.xxhash64(F.col("id")), nblocks).cast("int"))
         .withColumn("nbm", nblocks - F.lit(1))
-    )
-    cells = blocked.select(
-        "table",
-        "bucket",
-        F.col(id_col),
-        "__v",
-        F.explode(
-            F.expr(
+        .select(
+            "table", "bucket", "id", "unit",
+            F.explode(F.expr(
                 "concat("
                 " transform(sequence(bn, nbm),"
-                "           j -> struct(bn AS bn_a, j AS bn_b, 'A' AS side)),"
+                "           j -> struct(bn AS bn_a, j AS bn_b, true AS is_a)),"
                 " CASE WHEN bn > 0 THEN"
                 "   transform(sequence(0, bn - 1),"
-                "             i -> struct(i AS bn_a, bn AS bn_b, 'B' AS side))"
+                "             i -> struct(i AS bn_a, bn AS bn_b, false AS is_a))"
                 " ELSE array() END)"
-            )
-        ).alias("c"),
-    ).select(
-        "table", "bucket",
-        F.col("c.bn_a").alias("bn_a"), F.col("c.bn_b").alias("bn_b"),
-        id_col, "__v", F.col("c.side").alias("side"),
+            )).alias("c"),
+        )
+        .select("table", "bucket", "c.bn_a", "c.bn_b", "id", "unit", "c.is_a")
     )
 
-    def score_grid(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"a": pd.Series([], dtype="int64"),
-                              "b": pd.Series([], dtype="int64"),
-                              "cosine": pd.Series([], dtype="float64")})
-
-        def unit(frame: pd.DataFrame):
-            ids = frame[id_col].to_numpy()
-            E = np.stack([np.asarray(x, dtype=np.float64) for x in frame["__v"]])
-            norm2 = np.zeros(len(E))
-            for i in range(E.shape[1]):  # sequential dims = the SQL fold
-                norm2 = norm2 + E[:, i] * E[:, i]
-            return ids, E / np.sqrt(norm2)[:, None]
-
-        if pdf["bn_a"].iat[0] == pdf["bn_b"].iat[0]:
-            sub = pdf[pdf["side"] == "A"]  # diagonal cell: A == B rows
-            if len(sub) < 2:
-                return empty
-            ids, U = unit(sub)
-            S = np.zeros((len(U), len(U)))
-            for i in range(U.shape[1]):
-                S = S + U[:, i, None] * U[None, :, i]
-            iu, ju = np.triu_indices(len(U), 1)
-            mask = S[iu, ju] >= threshold
-            if not mask.any():
-                return empty
-            a_ids, b_ids = ids[iu[mask]], ids[ju[mask]]
-            cosv = S[iu[mask], ju[mask]]
+    def score_run(ids, is_a, U, diag):
+        if diag:  # every row of a diagonal cell is an A row
+            ia, ib = np.triu_indices(len(U), 1)
+            Ua, Ub = U, U
         else:
-            fa, fb = pdf[pdf["side"] == "A"], pdf[pdf["side"] == "B"]
-            if not len(fa) or not len(fb):
-                return empty
-            ids_a, Ua = unit(fa)
-            ids_b, Ub = unit(fb)
-            S = np.zeros((len(Ua), len(Ub)))
-            for i in range(Ua.shape[1]):
-                S = S + Ua[:, i, None] * Ub[None, :, i]
-            mask = S >= threshold
-            if not mask.any():
-                return empty
-            ia, jb = np.nonzero(mask)
-            a_ids, b_ids, cosv = ids_a[ia], ids_b[jb], S[ia, jb]
-        lo = np.minimum(a_ids, b_ids)
-        hi = np.maximum(a_ids, b_ids)
-        return pd.DataFrame({"a": lo, "b": hi, "cosine": cosv})
+            ia, ib = np.flatnonzero(is_a), np.flatnonzero(~is_a)
+            Ua, Ub = U[ia], U[ib]
+        S = np.zeros((len(Ua), len(Ub)))
+        for i in range(U.shape[1]):  # sequential dims = the SQL fold
+            S = S + Ua[:, i, None] * Ub[None, :, i]
+        if diag:
+            cos = S[ia, ib]
+            hit = np.flatnonzero(cos >= threshold)
+            x, y, cos = ids[ia[hit]], ids[ib[hit]], cos[hit]
+        else:
+            ra, rb = np.nonzero(S >= threshold)
+            x, y, cos = ids[ia[ra]], ids[ib[rb]], S[ra, rb]
+        return np.minimum(x, y), np.maximum(x, y), cos
 
-    big_pairs = (
-        cells.groupBy("table", "bucket", "bn_a", "bn_b")
-        .applyInPandas(score_grid, "a long, b long, cosine double")
+    def emit(parts):
+        a, b, cos = (np.concatenate(c) for c in zip(*parts))
+        return pa.record_batch({
+            "a": pa.array(a, pa.int64()),
+            "b": pa.array(b, pa.int64()),
+            "cosine": pa.array(cos, pa.float64()),
+        })
+
+    def score(batches):
+        run_key, run = None, []  # the open run, carried across batches
+
+        def close():
+            ids, is_a, U = (np.concatenate(c) for c in zip(*run))
+            return score_run(ids, is_a, U, run_key[2] == run_key[3])
+
+        for b in batches:
+            if not b.num_rows:
+                continue
+            k = [b.column(c).to_numpy() for c in keys]
+            ids = b.column("id").to_numpy()
+            is_a = b.column("is_a").to_numpy(zero_copy_only=False)
+            U = _list_col_matrix(np, b.column("unit"))
+            edges = np.flatnonzero(np.any([c[1:] != c[:-1] for c in k], axis=0)) + 1
+            out = []
+            for s, e in zip([0, *edges], [*edges, b.num_rows]):
+                key = tuple(int(c[s]) for c in k)
+                if key != run_key:
+                    if run:
+                        out.append(close())
+                    run_key, run = key, []
+                run.append((ids[s:e], is_a[s:e], U[s:e]))
+            if out:
+                yield emit(out)
+        if run:
+            yield emit([close()])
+
+    return (
+        cells.repartition(*keys)
+        .sortWithinPartitions(*keys)
+        .mapInArrow(score, "a long, b long, cosine double")
+        .dropDuplicates(["a", "b"])
     )
-    # one global pair-dedup across both branches: the same pair can
-    # surface from a small bucket in one table and a split bucket in
-    # another
-    return small_pairs.unionByName(big_pairs).dropDuplicates(["a", "b"])
+
 
 
 def lsh_topk(

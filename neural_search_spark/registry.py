@@ -454,11 +454,10 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus pass, O(docs × 16 × 8 B) on disk."""
     from .sources.index_store import load_or_build_artifact
 
-    docs = catalog.table(spark, sf_dir, "documents")
     key = {
         "n": 3,
         "num_hashes": DD.NUM_MINHASHES,
-        "doc_count": docs.count(),
+        "doc_count": _table_count(sf_dir, "documents"),
     }
     return load_or_build_artifact(
         spark,
@@ -571,8 +570,8 @@ def q_emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship embedding near-dup: multi-table SRP-LSH bucketed
     candidates + block-local vectorized cosine verify
     (operators/ann.py::lsh_multitable_neardup_blocked) — linear
-    candidate generation, ONE shuffle, no cartesian product, numpy
-    scoring inside each bucket; this is the 100 TB path. The O(n²)
+    candidate generation, no cartesian product, two Arrow kernels
+    (bucket, then score each bucket); this is the 100 TB path. The O(n²)
     exact pass survives as `emb_neardup_exact`, the small-scale
     recall verifier (tests/test_layout_and_properties.py)."""
     embs = catalog.table(spark, sf_dir, "embeddings")
@@ -11264,6 +11263,10 @@ def _table_count(sf_dir: str, table: str) -> int:
     import pyarrow.parquet as _pq
 
     p = _os.path.join(sf_dir, f"{table}.parquet")
+    if _os.path.isdir(p):  # a table written by Spark: one footer per part
+        return sum(
+            _pq.ParquetFile(f).metadata.num_rows for f in _pq.ParquetDataset(p).files
+        )
     return int(_pq.ParquetFile(p).metadata.num_rows)
 
 
@@ -11286,7 +11289,7 @@ def q_emb_neardup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship embedding near-dup with the N-SCALED plane count:
     identical operator to emb_neardup_cosine
     (ann.py::lsh_multitable_neardup_blocked — multi-table SRP buckets,
-    block-local vectorized cosine, ONE shuffle) but n_planes grows
+    block-local vectorized cosine) but n_planes grows
     with the corpus so bucket sizes — and therefore within-bucket
     quadratic work — stay constant. This is the graded 100 TB
     configuration."""
@@ -11388,11 +11391,10 @@ SPARK_QUERIES["semantic_dedup_scaled"] = q_semantic_dedup_scaled
 
 
 # N-scaled planes keep EXPECTED bucket size constant; a degenerate hot
-# bucket (one viral template duplicated millions of times) still pins a
-# single applyInPandas task with an n² score matrix — AQE's skew-join
-# splitting covers joins, not aggregation groups. The grid variant cuts
-# every bucket into ≤B-row blocks and scores each block-grid cell as its
-# own task: same pair set, bit-identical cosines, per-task memory ≤ B².
+# bucket (one viral template duplicated millions of times) is still one
+# n² score matrix when scored as one cell. The grid variant cuts every
+# bucket into ~B-row blocks and scores each block-grid cell on its own:
+# same pair set, bit-identical cosines, per-cell memory ~B².
 NEARDUP_GRID_BLOCK = 16  # < NEARDUP_TARGET_BUCKET so grading exercises real splits
 
 
@@ -14150,13 +14152,18 @@ def q_streaming_app_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     among the curated survivors — the batch twin
     tests/test_streaming_app.py proves equal to the streaming
     composition (there at 3 batches)."""
+    import tempfile
+
     from .streaming.app import StreamingIngestApp
 
     docs = catalog.table(spark, sf_dir, "documents").select("doc_id", "text")
     n = docs.count()
-    app = StreamingIngestApp(
-        _stream_scratch("app_" + sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    )
+    # an empty app state per construction: the dedup gate rejects a
+    # batch 0 whose ids are not above those already indexed, and an
+    # earlier returned frame still reads its own dir lazily, so it stays
+    app = StreamingIngestApp(tempfile.mkdtemp(
+        dir=_stream_scratch("app_" + sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    ))
     batches = [
         docs.where(F.col("doc_id") < n // 2),
         docs.where(F.col("doc_id") >= n // 2),

@@ -2,13 +2,13 @@
 
 N-scaled LSH planes keep the EXPECTED bucket size constant, but a
 degenerate corpus — one viral template duplicated many thousands of
-times — still lands one giant (table, bucket) group, and a groupBy
-group is atomic: one applyInPandas task builds the whole n×n score
-matrix while the rest of the cluster idles (AQE skew-join splitting
-applies to joins, not aggregation groups). The grid guard
+times — still lands one giant (table, bucket) bucket, and scored as
+one cell it is one n×n score matrix in one task while the rest of the
+cluster idles. The grid guard
 (`lsh_multitable_neardup_blocked(..., max_block_rows=B)`) cuts every
-bucket into ≤B-row blocks and scores each block-grid cell as its own
-task: identical pair set, bit-identical cosines, per-task memory ≤ B².
+bucket into ~B-row blocks and the score kernel scores each block-grid
+cell on its own: identical pair set, bit-identical cosines, per-cell
+memory ~B².
 
 Usage: python scripts/hot_bucket_report.py [hot_n] [bg_n]
 Appends nothing; prints the markdown rows for SKEW.md.

@@ -139,3 +139,22 @@ def test_bundle_builds_beside_sibling_artifact(spark, tmp_path):
     assert sib.count() == docs.count()
     assert os.path.isdir(os.path.join(root, "minhash_sigs"))
     shutil.rmtree(root, ignore_errors=True)
+
+
+def test_minhash_sigs_key_counts_documents_from_the_footer(spark, tmp_path):
+    """The stored `minhash_sigs` artifact is keyed by the documents' row
+    count, read from the parquet footer without a Spark job; the key
+    equals the one a counted scan gives, so stores written with the
+    scanned count are still found. A table Spark wrote as a directory
+    of parts is counted from every part's footer."""
+    import json
+
+    from .conftest import SF_SMOKE as sf
+
+    R._minhash_sigs(spark, sf)
+    with open(os.path.join(_store_root(sf), "minhash_sigs", "_artifact_meta.json")) as f:
+        key = json.load(f)
+    docs = spark.read.parquet(os.path.join(sf, "documents.parquet"))
+    assert key == {"n": 3, "num_hashes": R.DD.NUM_MINHASHES, "doc_count": docs.count()}
+    docs.repartition(3).write.parquet(str(tmp_path / "documents.parquet"))
+    assert R._table_count(str(tmp_path), "documents") == docs.count()

@@ -184,15 +184,16 @@ def test_lsh_multitable_recall_dominates_single(spark, sf_dir):
 
 
 def test_blocked_multitable_equals_expression_variant(spark, sf_dir):
-    """The applyInPandas block-scored multitable near-dup must produce
-    exactly the expression variant's pairs AND cosines (same buckets,
-    same fold association) — both directions checked."""
+    """The Arrow-kernel multitable near-dup (layout kernel: plane-sign
+    buckets and unit vectors; score kernel: one sequential fold per
+    bucket cell) must produce exactly the expression variant's pairs
+    AND cosines (same sign bits, same fold association) — both
+    directions checked."""
     from neural_search_spark import catalog
 
     embs = catalog.table(spark, sf_dir, "embeddings")
     kw = dict(threshold=0.45, n_planes=4, n_tables=4)
-    # collected-set comparison (exceptAll over a FlatMapGroupsInPandas
-    # plan trips a Catalyst binding bug); exact float equality expected
+    # collected-set comparison; exact float equality expected
     expr_rows = {
         (r["a"], r["b"], r["cosine"])
         for r in ANN.lsh_multitable_neardup(embs, 64, **kw).collect()

@@ -38,10 +38,10 @@ def test_neardup_grid_blocks_identical_to_atomic_buckets(spark):
     """Hot-bucket grid guard (ann.py max_block_rows): a corpus with a
     100-copy viral template (one giant LSH bucket in every table) must
     produce the IDENTICAL pair rows — same (a, b) set AND bit-identical
-    cosines — whether the bucket is scored as one atomic group or as a
-    grid of block-pair tasks, at several block sizes including B=1
-    (every pair crosses blocks) and B larger than any bucket (grid
-    collapses to the atomic plan)."""
+    cosines — whether the score kernel walks each bucket as one
+    diagonal cell or as a grid of block-pair cells, at several block
+    sizes including B=1 (every pair crosses blocks) and B larger than
+    any bucket (every bucket one cell, as with no B)."""
     import numpy as np
 
     from neural_search_spark.operators import ann as ANN

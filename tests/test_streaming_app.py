@@ -252,3 +252,17 @@ def test_non_monotone_ids_raise(spark, tmp_path):
     app.apply_batch(later, 0)  # replay of the same batch id passes
     with pytest.raises(ValueError, match="monotone"):
         app.apply_batch(earlier, 1)
+
+
+def test_streaming_app_kept_constructs_twice(spark):
+    """The `streaming_app_kept` contract query builds its app state
+    inside the construction: a second construction in one process must
+    start from an empty state (its batch 0 would otherwise fail the
+    monotone-id gate), and the first returned frame must still read."""
+    from neural_search_spark import registry as R
+
+    fn = R.SPARK_QUERIES["streaming_app_kept"]
+    first = fn(spark, SF_SMOKE)
+    second = fn(spark, SF_SMOKE)
+    kept = [r["doc_id"] for r in second.collect()]
+    assert kept and [r["doc_id"] for r in first.collect()] == kept
