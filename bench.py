@@ -246,7 +246,20 @@ def _prior_round_reference() -> dict[str, float]:
         return {}
 
 
+def sf_dir_from_env() -> str:
+    """The corpus dir named by SPARK_GRAFT_SF_DIR (default sf0.1); a dir
+    without a documents table fails here, naming the variable, instead
+    of deep inside the first query."""
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if not os.path.exists(os.path.join(sf_dir, "documents.parquet")):
+        raise ValueError(
+            f"SPARK_GRAFT_SF_DIR={sf_dir!r} has no documents.parquet"
+        )
+    return sf_dir
+
+
 def main() -> None:
+    sf_dir = sf_dir_from_env()
     # STDOUT CONTRACT: exactly one JSON document. The JVM (and any
     # library chatter) writes to fd 1 directly, which Python-level
     # redirection can't intercept — so save the real stdout fd, point
@@ -256,7 +269,6 @@ def main() -> None:
     os.dup2(2, 1)
     sys.stdout = sys.stderr
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark("neural-search-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")

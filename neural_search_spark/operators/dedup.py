@@ -9,11 +9,15 @@ shingle everywhere.
 Scale shapes (the whole point of these implementations):
 - exact: one groupBy on a 32-char hash — shuffle is O(corpus), the
   canonical first pass.
-- MinHash LSH: explode shingles → one groupBy(doc) computing all 16
-  signature mins in a single aggregation pass → explode bands → a
-  self-equi-join ON (band_idx, band_hash) that only pairs up colliding
-  buckets. No O(n²) anywhere; skewed buckets are handled by AQE skew
-  join. Verification (true Jaccard) touches only candidate pairs.
+- MinHash LSH: one `mapInArrow` kernel over (id, lower(text)) builds
+  each doc's distinct shingles and all 16 signature mins (one md5 per
+  distinct shingle of the Arrow batch per 4 components, one numpy
+  min-reduce per component) → explode bands → a self-equi-join ON
+  (band_idx, band_hash) that only pairs up colliding buckets. No O(n²)
+  anywhere; skewed buckets are handled by AQE skew join. Verification
+  (true Jaccard) touches only candidate pairs: each pair joins its two
+  texts and a second kernel intersects their shingle sets, so no
+  (doc, shingle) row is ever materialized on the MinHash path.
 - SimHash: one exploded-token aggregation computing 64 weighted bit
   sums per doc; near-dup = equality/low-hamming on the fingerprint.
 - n-gram Jaccard: inverted-index self-join on shingle (pairs only
@@ -78,24 +82,98 @@ def shingle_sets(docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: 
     )
 
 
-def minhash_signatures(shingles: DataFrame, num_hashes: int = NUM_MINHASHES, id_col: str = "doc_id") -> DataFrame:
-    """One aggregation pass computes all signature components.
+def _shingle_set(text: "bytes | None", n: int) -> set:
+    """The distinct n-word shingles of one lowered UTF-8 text, as
+    `word_shingles` builds them: bytes.split() splits on runs of the six
+    ASCII whitespace bytes, the set Java's `\\s` (and Python's under
+    re.ASCII) matches, so U+00A0 and U+0085 never split; fewer than n
+    tokens, or a null text, give no shingle."""
+    if text is None:
+        return set()
+    toks = text.split()
+    return set(map(b" ".join, zip(*(toks[i:] for i in range(n)))))
+
+
+def _lowered_texts(batch, col: int) -> list:
+    # the Spark-lowered text column as UTF-8 bytes (None for null)
+    import pyarrow as pa
+
+    return batch.column(col).cast(pa.binary()).to_pylist()
+
+
+def minhash_signatures(
+    docs: DataFrame,
+    n: int = 3,
+    num_hashes: int = NUM_MINHASHES,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """(id, h0..h{H-1}) MinHash signatures of every document with at
+    least one n-word shingle, in one `mapInArrow` kernel over
+    (id, lower(text)); the lowering stays in Spark's `lower`.
 
     Hash family: each md5(shingle ∥ '#k') yields four independent
     32-bit hashes (8 hex chars each), so 16 signatures cost 4 md5
-    evaluations per shingle instead of 16 — md5 dominates the pass, so
-    this is ~4× cheaper at equal signature quality.
+    evaluations per shingle instead of 16:
     h_{4k+j}(doc) = min over shingles of substr(md5(shingle∥'#k'), 8j, 8).
-    """
+    Per Arrow batch the kernel hashes each distinct shingle of the batch
+    once per k, reads the digests as big-endian uint32 words and takes
+    every document's minimum with one `np.minimum.reduceat` per
+    component; the lexicographic min of 8-char lowercase hex is the
+    numeric min of the word, so each `%08x` value equals the SQL
+    `min(substring(md5(...)))` (equality tested against that form).
+    A document without a shingle (fewer than n tokens, null text)
+    emits no row; the id keeps its input type."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow as pa
+
     n_md5 = (num_hashes + 3) // 4
-    aggs = []
-    for k in range(n_md5):
-        h = F.md5(F.concat(F.col("shingle"), F.lit(f"#{k}")))
-        for j in range(4):
-            if k * 4 + j >= num_hashes:
-                break
-            aggs.append(F.min(F.substring(h, j * 8 + 1, 8)).alias(f"h{k * 4 + j}"))
-    return shingles.groupBy(id_col).agg(*aggs)
+    suffixes = [f"#{k}".encode() for k in range(n_md5)]
+    names = [id_col, *(f"h{i}" for i in range(num_hashes))]
+
+    def hex8(words) -> pa.Array:
+        data = words.astype(">u4").tobytes().hex().encode()
+        offsets = np.arange(0, 8 * len(words) + 1, 8, dtype=np.int32)
+        return pa.StringArray.from_buffers(
+            len(words), pa.py_buffer(offsets), pa.py_buffer(data)
+        )
+
+    def sign(batches):
+        for b in batches:
+            sets = [_shingle_set(t, n) for t in _lowered_texts(b, 1)]
+            sizes = np.fromiter(map(len, sets), np.int64, len(sets))
+            keep = sizes > 0
+            if not keep.any():
+                continue
+            slot: dict = {}
+            idx = np.fromiter(
+                (slot.setdefault(s, len(slot)) for sh in sets for s in sh),
+                np.int64, int(sizes.sum()),
+            )
+            digests = b"".join(
+                hashlib.md5(s + x).digest() for s in slot for x in suffixes
+            )
+            words = np.frombuffer(digests, ">u4").reshape(len(slot), 4 * n_md5)
+            starts = np.concatenate([[0], np.cumsum(sizes[keep])[:-1]])
+            yield pa.record_batch(
+                [
+                    b.column(0).filter(pa.array(keep)),
+                    *(
+                        hex8(np.minimum.reduceat(words[idx, i], starts))
+                        for i in range(num_hashes)
+                    ),
+                ],
+                names=names,
+            )
+
+    id_type = docs.schema[id_col].dataType.simpleString()
+    return docs.select(F.col(id_col), F.lower(F.col(text_col))).mapInArrow(
+        sign,
+        f"{id_col} {id_type}, "
+        + ", ".join(f"h{i} string" for i in range(num_hashes)),
+    )
 
 
 def band_frame(
@@ -176,7 +254,7 @@ def minhash_lsh_dedup_sig(
     `signatures` (optional) is a precomputed (id_col, h0..h{H-1})
     frame covering exactly the docs of `docs` — typically a write-once
     ingest ARTIFACT (sources/index_store.py::load_or_build_artifact).
-    Without it, the signature aggregation is built inline and feeds
+    Without it, the signature kernel is built inline and feeds
     three consumers (the band frame and both sides of the verify
     join); a plan-internal persist would leak in a long-lived session
     (no owner unpersists it — ADVICE r8), and ReuseExchange does NOT
@@ -185,8 +263,7 @@ def minhash_lsh_dedup_sig(
     in the caller-owned artifact, which every consumer then scans as
     cheap columnar parquet."""
     if signatures is None:
-        sh = shingle_sets(docs, n, id_col, text_col)
-        signatures = minhash_signatures(sh, id_col=id_col)
+        signatures = minhash_signatures(docs, n, id_col=id_col, text_col=text_col)
     cands = lsh_candidate_pairs(signatures, id_col=id_col)
     return signature_jaccard(cands, signatures).where(
         F.col("sig_sim") >= threshold
@@ -222,33 +299,62 @@ def lsh_candidate_pairs(
 
 
 def jaccard_verify(
-    pairs: DataFrame, shingles: DataFrame, threshold: float = 0.5, id_col: str = "doc_id"
+    pairs: DataFrame,
+    docs: DataFrame,
+    threshold: float = 0.5,
+    n: int = 3,
+    id_col: str = "doc_id",
+    text_col: str = "text",
 ) -> DataFrame:
-    """True Jaccard on shingle sets, computed ONLY for candidate pairs.
+    """True Jaccard of the n-word shingle sets, computed ONLY for the
+    candidate pairs (a, b): each pair joins (id, lower(text)) once per
+    side and one `mapInArrow` kernel builds both shingle sets (as
+    `minhash_signatures` does; a text shared by several pairs of a
+    batch is split once) and scores inter / (|A| + |B| − inter) in
+    float64 — Spark's double division, so the value is bit-equal to the
+    SQL form. Returns (a, b, jaccard) for pairs ≥ threshold that share
+    at least one shingle."""
+    import numpy as np
+    import pyarrow as pa
 
-    Returns (a, b, jaccard) for pairs ≥ threshold.
-    """
-    sizes = shingles.groupBy(id_col).agg(F.count("*").alias("sz"))
-    sa = shingles.select(F.col(id_col).alias("a"), F.col("shingle").alias("sh_a"))
-    sb = shingles.select(F.col(id_col).alias("b2"), F.col("shingle").alias("sh_b"))
-    inter = (
-        pairs.join(sa, "a")
-        .join(sb, (F.col("b") == F.col("b2")) & (F.col("sh_a") == F.col("sh_b")))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed(id_col, "a").withColumnRenamed("sz", "sz_a"), "a")
-        .join(sizes.withColumnRenamed(id_col, "b").withColumnRenamed("sz", "sz_b"), "b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
+    def texts(side: str) -> DataFrame:
+        return docs.select(
+            F.col(id_col).alias(side), F.lower(F.col(text_col)).alias(f"t{side}")
         )
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
+
+    def verify(batches):
+        for b in batches:
+            # id → shingle set: a doc in several pairs of the batch is
+            # split once
+            sets: dict = {}
+            for col in (0, 1):
+                for i, t in zip(b.column(col).to_pylist(), _lowered_texts(b, col + 2)):
+                    if i not in sets:
+                        sets[i] = _shingle_set(t, n)
+            ab = list(zip(b.column(0).to_pylist(), b.column(1).to_pylist()))
+            inter = np.array([len(sets[x] & sets[y]) for x, y in ab], np.float64)
+            union = np.array([len(sets[x]) + len(sets[y]) for x, y in ab], np.float64) - inter
+            # a pair sharing no shingle is dropped (and may have union 0)
+            shared = inter > 0
+            jac = np.divide(inter, union, out=np.zeros(len(ab)), where=shared)
+            hit = pa.array(shared & (jac >= threshold))
+            yield pa.record_batch(
+                [b.column(0).filter(hit), b.column(1).filter(hit), pa.array(jac).filter(hit)],
+                names=["a", "b", "jaccard"],
+            )
+
+    schema = pairs.select("a", "b").schema
+    return (
+        pairs.select("a", "b")
+        .join(texts("a"), "a")
+        .join(texts("b"), "b")
+        .select("a", "b", "ta", "tb")
+        .mapInArrow(
+            verify,
+            f"a {schema['a'].dataType.simpleString()}, "
+            f"b {schema['b'].dataType.simpleString()}, jaccard double",
+        )
     )
-    return out
 
 
 def collapse_exact(
@@ -309,7 +415,7 @@ def near_dup_survivors(
     identical signatures and representatives keep their original id
     and text, so the reps' signatures are exactly the artifact rows
     semi-join-restricted to rep ids — one equi-join replaces the
-    shingle explode + 16-way min aggregation over the reps
+    signature kernel over the reps
     (equality pinned by tests/test_dedup_clusters.py).
 
     Optimization r10 (signatures path): the collapse assignment is

@@ -275,9 +275,10 @@ class IncrementalLSHDedupIndex:
         else:
             new_docs = hashed
 
-        sh = DD.shingle_sets(new_docs, self.shingle_n, id_col, text_col)
         sigs = (
-            DD.minhash_signatures(sh, self.num_hashes, id_col)
+            DD.minhash_signatures(
+                new_docs, self.shingle_n, self.num_hashes, id_col, text_col
+            )
             .join(new_docs.select(id_col, "content_hash"), id_col)
             .persist()
         )

@@ -338,13 +338,13 @@ def test_dedup_survivors_second_construction_runs_no_job(spark):
 def test_precomputed_signatures_equal_inline(spark):
     """Judge r9 next-round #1: feeding minhash_lsh_dedup_sig /
     near_dup_survivors a precomputed signature frame (the write-once
-    corpus artifact, here simulated by materializing the aggregation)
+    corpus artifact, here simulated by the signature kernel's frame)
     must be a pure plan substitution — identical pair and survivor
     sets to the inline computation."""
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
         "doc_id", "text"
     )
-    sigs = DD.minhash_signatures(DD.shingle_sets(docs))
+    sigs = DD.minhash_signatures(docs)
 
     inline_pairs = {
         (r["a"], r["b"], r["sig_sim"])
