@@ -9,13 +9,19 @@ then the Lucene-style score expression:
     idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5))
     score  = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))
 
+The term score is built in one place, `term_score_sql`; every scorer
+below evaluates that string.
+
 Scale shape: every input of the term score is joined once per corpus
 snapshot into the scored postings (doc_id, token, tf, dl, df), which
-the engine keeps in memory (`scored_postings`). A query filters them
-with a literal `token IN (...)` predicate, scores each row with one SQL
-expression, runs a groupBy(doc) and a TakeOrdered top-k: no join or
-broadcast per query beyond a filter's candidate semi-join, and no
-corpus-wide shuffle.
+the engine keeps in memory (`scored_postings`; `combined_fields` keeps
+one per field-weight set). `match`, `terms_set`, `combined_fields` and
+the `_explain` breakdown filter them with a literal `token IN (...)`
+predicate, score each row with the one SQL expression, and run a
+groupBy(doc) and a TakeOrdered top-k: no join or broadcast per query
+beyond a filter's candidate semi-join, and no corpus-wide shuffle. The
+positional operators (phrase, spans, intervals) count tf from position
+lists and df over their match set, then score with the same string.
 """
 
 from __future__ import annotations
@@ -41,9 +47,9 @@ class BM25Index:
     # term dictionary (token, df long) — Lucene stores docFreq in the
     # term dictionary. None → `term_dictionary(postings)`.
     dfs: DataFrame | None = None
-    # `scored_postings` of this index, persisted by its owner (the
-    # engine keeps one per corpus and analyzer). None → bm25_scores
-    # joins them lazily per query.
+    # `scored_postings` of this index, persisted (the engine keeps one
+    # per corpus and analyzer; `build_combined_fields` persists its
+    # own). None → bm25_scores joins them lazily per query.
     scored: DataFrame | None = None
 
 
@@ -110,6 +116,34 @@ def scored_postings(
     ).join(F.broadcast(doclen), id_col)
 
 
+def query_tokens(query: str, analyzer: str | None) -> list[str]:
+    """The distinct tokens of `query` under `analyzer` (None: lowercased
+    whitespace split), sorted."""
+    if analyzer is None:
+        return sorted({t for t in query.lower().split() if t})
+    from ..functions.analyzers import analyze_py
+
+    return sorted(set(analyze_py(query, analyzer)))
+
+
+def idf_sql(n: int) -> str:
+    """The BM25 idf of a row's `df` (double) in a corpus of `n` docs,
+    as SQL text: ln(1 + (N - df + 0.5)/(df + 0.5))."""
+    return f"ln(1.0D + ({double_sql(n)} - df + 0.5D) / (df + 0.5D))"
+
+
+def term_score_sql(n: int, avgdl: float, k1: float = K1, b: float = B) -> str:
+    """The one BM25 term score, as SQL text over a row's (tf, dl, df)
+    doubles: idf · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl)), k1 + 1
+    and 1 - b folded into literals. Every lexical scorer of this engine
+    evaluates this string (summed per doc where it scores a query)."""
+    d = double_sql
+    return (
+        f"{idf_sql(n)} * (tf * {d(k1 + 1.0)})"
+        f" / (tf + {d(k1)} * ({d(1.0 - b)} + {d(b)} * dl / {d(avgdl)}))"
+    )
+
+
 def bm25_scores(
     index: BM25Index,
     query: str,
@@ -131,33 +165,20 @@ def bm25_scores(
     Reads the index's scored postings (`scored_postings`) through a
     literal `token IN (...)` filter: no per-query join and no
     broadcast, each of which would run a Spark job of its own. The
-    term score is one SQL expression with the operation order of
-    idf · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl)), k1 + 1 and 1 - b
-    folded driver-side."""
+    term score is `term_score_sql`."""
     from .retrieval import token_in_sql
 
     n, avgdl = index.stats
-    qa = search_analyzer or index.analyzer
-    if qa is None:
-        qtokens = sorted({t for t in query.lower().split() if t})
-    else:
-        from ..functions.analyzers import analyze_py
-
-        qtokens = sorted(set(analyze_py(query, qa)))
+    qtokens = query_tokens(query, search_analyzer or index.analyzer)
     scored = index.scored
     if scored is None:
         scored = scored_postings(index.postings, index.doclen, index.dfs, id_col)
     if candidate_ids is not None:
         scored = scored.join(F.broadcast(candidate_ids.select(id_col)), id_col, "semi")
-    d = double_sql
-    term = (
-        f"ln(1.0D + ({d(n)} - df + 0.5D) / (df + 0.5D)) * (tf * {d(k1 + 1.0)})"
-        f" / (tf + {d(k1)} * ({d(1.0 - b)} + {d(b)} * dl / {d(avgdl)}))"
-    )
     return (
         scored.where(F.expr(token_in_sql(qtokens)))
         .groupBy(id_col)
-        .agg(F.expr(f"sum({term})").alias("score"))
+        .agg(F.expr(f"sum({term_score_sql(n, avgdl, k1, b)})").alias("score"))
     )
 
 
@@ -236,6 +257,38 @@ def build_positional(
     )
 
 
+def _term_side(positional: DataFrame, token: str, j: int, id_col: str) -> DataFrame:
+    """(id, _p{j}): the position lists of one token, a token-pruned scan
+    of the positional postings."""
+    return positional.where(F.col("token") == token).select(
+        F.col(id_col), F.col("positions").alias(f"_p{j}")
+    )
+
+
+def _phrase_tf(
+    sides: list[DataFrame], id_col: str, candidate_ids: DataFrame | None
+) -> DataFrame:
+    """(id, tf double > 0) of a phrase over its position sides (`_p{j}`
+    the positions of phrase slot j): the docs holding every slot, tf the
+    number of slot-0 positions p with slot j at p + j. `candidate_ids`
+    restricts the docs BEFORE the caller counts df over them: a phrase
+    rescore counts its df over the rescore window."""
+    joined = sides[0]
+    for side in sides[1:]:
+        joined = joined.join(side, id_col)
+    if candidate_ids is not None:
+        joined = joined.join(F.broadcast(candidate_ids.select(id_col)), id_col, "semi")
+
+    def aligned(p):
+        cond = F.lit(True)
+        for j in range(1, len(sides)):
+            cond = cond & F.array_contains(F.col(f"_p{j}"), p + F.lit(j))
+        return cond
+
+    tf = F.size(F.filter(F.col("_p0"), aligned)).cast("double")
+    return joined.select(F.col(id_col), tf.alias("tf")).where(F.col("tf") > 0)
+
+
 def phrase_topk(
     positional: DataFrame,
     index: BM25Index,
@@ -261,46 +314,9 @@ def phrase_topk(
     terms = [t for t in phrase.lower().split() if t]
     if not terms:
         raise ValueError("empty phrase")
-    n, avgdl = index.stats
-
-    sides = []
-    for j, t in enumerate(terms):
-        sides.append(
-            positional.where(F.col("token") == t).select(
-                F.col(id_col), F.col("positions").alias(f"_p{j}")
-            )
-        )
-    joined = sides[0]
-    for j in range(1, len(terms)):
-        joined = joined.join(sides[j], id_col)
-    if candidate_ids is not None:
-        joined = joined.join(F.broadcast(candidate_ids.select(id_col)), id_col, "semi")
-
-    def aligned(p):
-        cond = F.lit(True)
-        for j in range(1, len(terms)):
-            cond = cond & F.array_contains(F.col(f"_p{j}"), p + F.lit(j))
-        return cond
-
-    tf = F.size(F.filter(F.col("_p0"), aligned)).cast("double")
-    matched = (
-        joined.select(F.col(id_col), tf.alias("tf")).where(F.col("tf") > 0)
-    )
-    dfs = matched.agg(F.count("*").cast("double").alias("df"))
-    idf = F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    scored = (
-        matched.join(index.doclen, id_col)
-        .crossJoin(F.broadcast(dfs))
-        .select(
-            F.col(id_col),
-            (
-                idf
-                * (F.col("tf") * (k1 + 1.0))
-                / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-            ).alias("score"),
-        )
-    )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
+    sides = [_term_side(positional, t, j, id_col) for j, t in enumerate(terms)]
+    matched = _phrase_tf(sides, id_col, candidate_ids)
+    return _bm25_from_tf(matched, index, k, id_col, k1, b)
 
 
 def phrase_prefix_topk(
@@ -322,57 +338,20 @@ def phrase_prefix_topk(
     terms = [t for t in phrase.lower().split() if t]
     if not terms:
         raise ValueError("empty phrase")
-    n, avgdl = index.stats
     *exact_terms, prefix = terms
-
-    sides = []
-    for j, t in enumerate(exact_terms):
-        sides.append(
-            positional.where(F.col("token") == t).select(
-                F.col(id_col), F.col("positions").alias(f"_p{j}")
-            )
-        )
+    sides = [_term_side(positional, t, j, id_col) for j, t in enumerate(exact_terms)]
     # prefix side: union of all prefix-matching tokens' positions
-    last_j = len(exact_terms)
-    pre = (
+    sides.append(
         positional.where(F.col("token").startswith(prefix))
         .groupBy(id_col)
         .agg(
             F.array_sort(
                 F.array_distinct(F.flatten(F.collect_list("positions")))
-            ).alias(f"_p{last_j}")
+            ).alias(f"_p{len(exact_terms)}")
         )
     )
-    sides.append(pre)
-    joined = sides[0]
-    for j in range(1, len(sides)):
-        joined = joined.join(sides[j], id_col)
-    if candidate_ids is not None:
-        joined = joined.join(F.broadcast(candidate_ids.select(id_col)), id_col, "semi")
-
-    def aligned(p):
-        cond = F.lit(True)
-        for j in range(1, len(sides)):
-            cond = cond & F.array_contains(F.col(f"_p{j}"), p + F.lit(j))
-        return cond
-
-    tf = F.size(F.filter(F.col("_p0"), aligned)).cast("double")
-    matched = joined.select(F.col(id_col), tf.alias("tf")).where(F.col("tf") > 0)
-    dfs = matched.agg(F.count("*").cast("double").alias("df"))
-    idf = F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    scored = (
-        matched.join(index.doclen, id_col)
-        .crossJoin(F.broadcast(dfs))
-        .select(
-            F.col(id_col),
-            (
-                idf
-                * (F.col("tf") * (k1 + 1.0))
-                / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-            ).alias("score"),
-        )
-    )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
+    matched = _phrase_tf(sides, id_col, candidate_ids)
+    return _bm25_from_tf(matched, index, k, id_col, k1, b)
 
 
 def fuzzy_topk(
@@ -729,27 +708,17 @@ def _bm25_from_tf(
 ) -> DataFrame:
     """Shared BM25 tail for positional/span operators: given a
     (doc_id, tf) frame of matches, derive df from the match set and
-    score with the index's corpus stats. One 1-row df agg broadcast —
-    no corpus rescan. `candidate_ids` (P2 hybrid-filter pushdown,
-    `query/HybridQueryBuilder.java:117-128`) restricts the RETURNED
-    docs before top-k; df stays a corpus-level stat (Lucene scores
-    with unfiltered IDF under filter clauses)."""
+    score with `term_score_sql` and the index's corpus stats. One 1-row
+    df agg broadcast — no corpus rescan. `candidate_ids` (P2
+    hybrid-filter pushdown, `query/HybridQueryBuilder.java:117-128`)
+    restricts the RETURNED docs before top-k; df stays a corpus-level
+    stat (Lucene scores with unfiltered IDF under filter clauses)."""
     n, avgdl = index.stats
     dfs = matched.agg(F.count("*").cast("double").alias("df"))
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
     scored = (
         matched.join(index.doclen, id_col)
         .crossJoin(F.broadcast(dfs))
-        .select(
-            F.col(id_col),
-            (
-                idf
-                * (F.col("tf") * (k1 + 1.0))
-                / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-            ).alias("score"),
-        )
+        .select(F.col(id_col), F.expr(term_score_sql(n, avgdl, k1, b)).alias("score"))
     )
     if candidate_ids is not None:
         scored = scored.join(
@@ -831,16 +800,9 @@ def intervals_topk(
     tl = [t.lower() for t in terms]
     if len(tl) < 2:
         raise ValueError("intervals needs at least two terms")
-    sides = []
-    for j, t in enumerate(tl):
-        sides.append(
-            positional.where(F.col("token") == t).select(
-                F.col(id_col), F.col("positions").alias(f"_p{j}")
-            )
-        )
-    joined = sides[0]
+    joined = _term_side(positional, tl[0], 0, id_col)
     for j in range(1, len(tl)):
-        joined = joined.join(sides[j], id_col)
+        joined = joined.join(_term_side(positional, tl[j], j, id_col), id_col)
 
     def _after(c):
         return lambda q: q > c
@@ -980,21 +942,17 @@ def span_within_topk(
     return _bm25_from_tf(matched, index, k, id_col, candidate_ids=candidate_ids)
 
 
-@dataclass
-class CombinedFieldsIndex:
-    """Weight-merged virtual-field index for `combined_fields` — an
-    INGEST artifact (like BM25Index): build once per field set, reuse
-    per query. `postings` carries the merged tf for EVERY token, so
-    query time is one broadcast token join + score."""
-
-    postings: DataFrame  # (doc_id, token, tf) weight-merged
-    doclen: DataFrame  # (doc_id, dl) weight-merged
-    stats: DataFrame  # 1-row (__n, __avgdl) — stays lazy, broadcast at use
-
-
 def build_combined_fields(
     indexes: list[tuple[BM25Index, float]], id_col: str = "doc_id"
-) -> CombinedFieldsIndex:
+) -> BM25Index:
+    """The index of `combined_fields` (BM25F-style unified statistics,
+    which OpenSearch documents; unlike multi_match, term statistics are
+    UNIFIED across fields, not per-field): a virtual field whose tf and
+    doc lengths are the per-field values merged with the field weights,
+    scored by `bm25_topk` like any other field. An ingest artifact:
+    (N, avgdl) are collected here (one Spark job) and the scored
+    postings are persisted; the owner unpersists `scored` when it
+    drops the index."""
     tf_parts = [
         idx.postings.select(
             F.col(id_col), "token", (F.col("tf") * F.lit(w)).alias("tf")
@@ -1013,61 +971,8 @@ def build_combined_fields(
     for part in dl_parts[1:]:
         dls = dls.unionByName(part)
     dlc = dls.groupBy(id_col).agg(F.sum("dl").alias("dl"))
-    stats = dlc.agg(
-        F.count("*").cast("double").alias("__n"), F.avg("dl").alias("__avgdl")
+    n, avgdl = dlc.agg(F.count("*"), F.avg("dl")).first()
+    return BM25Index(
+        postings=tfc, doclen=dlc, stats=(int(n), float(avgdl)),
+        scored=scored_postings(tfc, dlc, id_col=id_col).persist(),
     )
-    return CombinedFieldsIndex(postings=tfc, doclen=dlc, stats=stats)
-
-
-def combined_fields_topk(
-    indexes: list[tuple[BM25Index, float]] | CombinedFieldsIndex,
-    query: str,
-    k: int = 10,
-    id_col: str = "doc_id",
-    k1: float = K1,
-    b: float = B,
-    candidate_ids: DataFrame | None = None,
-) -> DataFrame:
-    """`combined_fields` query: BM25 over a virtual field whose term
-    frequencies and lengths are the per-field values merged with field
-    weights (the BM25F-style single-stats combination OpenSearch
-    documents — unlike multi_match, term statistics are UNIFIED across
-    fields, not per-field). Pass a prebuilt (cached/persisted)
-    CombinedFieldsIndex for the production path — the per-query work
-    is then a broadcast token join + one score agg; a raw index list
-    builds the artifact inline (small-corpus convenience)."""
-    cidx = (
-        indexes
-        if isinstance(indexes, CombinedFieldsIndex)
-        else build_combined_fields(indexes, id_col)
-    )
-    terms = sorted({t for t in query.lower().split() if t})
-    spark = cidx.postings.sparkSession
-    from .retrieval import token_frame
-
-    q = token_frame(spark, dict.fromkeys(terms, 1.0)).select("token")
-    tfc = cidx.postings.join(F.broadcast(q), "token")
-    dlc = cidx.doclen
-    stats = cidx.stats
-    df_tbl = tfc.groupBy("token").agg(F.count("*").cast("double").alias("df"))
-    idf = F.log(
-        F.lit(1.0) + (F.col("__n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    scored = (
-        tfc.join(F.broadcast(df_tbl), "token")
-        .join(dlc, id_col)
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "term_score",
-            idf
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("__avgdl"))),
-        )
-        .groupBy(id_col)
-        .agg(F.sum("term_score").alias("score"))
-    )
-    if candidate_ids is not None:
-        scored = scored.join(
-            F.broadcast(candidate_ids.select(id_col)), id_col, "semi"
-        )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)

@@ -570,23 +570,30 @@ def simhash_neardup_pairs(
     exact 64-position hamming distance filters. Returns (a, b, hamming).
     """
     banded = _packed_bands(fingerprints, n_bands, id_col)
+    return _band_self_join(banded, max_hamming, id_col).dropDuplicates(["a", "b"])
+
+
+def _band_self_join(banded: DataFrame, max_hamming: int, id_col: str) -> DataFrame:
+    """(a, b, hamming), a < b, of a `_packed_bands` frame: its band
+    equi-self-join, kept where the popcount of the XORed fingerprints
+    is ≤ max_hamming. A pair sharing several bands appears once per
+    band; callers de-duplicate after this filter.
+
+    r10: candidates used to carry the 64-char bit STRING through the
+    band join and pass through a distinct() on the wide (a, b, sh_a,
+    sh_b) frame BEFORE the hamming filter. The fingerprint is now ONE
+    packed long (same bits — see _packed_bands), hamming is a single
+    bit_count(XOR), and the multi-band de-dup happens AFTER the
+    hamming filter on the tiny survivor frame — the re-computed
+    popcount per duplicate candidate is cheaper than an exchange over
+    the whole candidate set (interleaved A/B: 3.77 → 3.32 s med on
+    the blocked sibling at sf0.1; bit-identical pairs)."""
     left = banded.select(
-        F.col("band_idx"), F.col("band"),
-        F.col(id_col).alias("a"), F.col("__fp").alias("fa"),
+        "band_idx", "band", F.col(id_col).alias("a"), F.col("__fp").alias("fa"),
     )
     right = banded.select(
-        F.col("band_idx"), F.col("band"),
-        F.col(id_col).alias("b"), F.col("__fp").alias("fb"),
+        "band_idx", "band", F.col(id_col).alias("b"), F.col("__fp").alias("fb"),
     )
-    # r10: candidates used to carry the 64-char bit STRING through the
-    # band join and pass through a distinct() on the wide (a, b, sh_a,
-    # sh_b) frame BEFORE the hamming filter. The fingerprint is now ONE
-    # packed long (same bits — see _packed_bands), hamming is a single
-    # bit_count(XOR), and the multi-band de-dup happens AFTER the
-    # hamming filter on the tiny survivor frame — the re-computed
-    # popcount per duplicate candidate is cheaper than an exchange over
-    # the whole candidate set (interleaved A/B: 3.77 → 3.32 s med on
-    # the blocked sibling at sf0.1; bit-identical pairs)
     hamming = F.bit_count(F.col("fa").bitwiseXOR(F.col("fb"))).cast("int")
     return (
         left.join(right, ["band_idx", "band"])
@@ -594,7 +601,6 @@ def simhash_neardup_pairs(
         .withColumn("hamming", hamming)
         .where(F.col("hamming") <= max_hamming)
         .select("a", "b", "hamming")
-        .dropDuplicates(["a", "b"])
     )
 
 
@@ -671,36 +677,9 @@ def simhash_neardup_pairs_blocked(
         }
     )
 
-    _hamming_expr = F.bit_count(
-        F.col("fa").bitwiseXOR(F.col("fb"))
-    ).cast("int")
-
-    def _join_pairs(banded: DataFrame) -> DataFrame:
-        """JVM band self-join + integer hamming (the expression path of
-        simhash_neardup_pairs, over an arbitrary banded frame). Multi-
-        band duplicate candidates survive to the caller's final
-        dropDuplicates — filtering on the cheap popcount FIRST beats
-        de-duplicating the whole candidate frame (r10, see
-        simhash_neardup_pairs)."""
-        left = banded.select(
-            "band_idx", "band",
-            F.col(id_col).alias("a"), F.col("__fp").alias("fa"),
-        )
-        right = banded.select(
-            "band_idx", "band",
-            F.col(id_col).alias("b"), F.col("__fp").alias("fb"),
-        )
-        return (
-            left.join(right, ["band_idx", "band"])
-            .where(F.col("a") < F.col("b"))
-            .withColumn("hamming", _hamming_expr)
-            .where(F.col("hamming") <= max_hamming)
-            .select("a", "b", "hamming")
-        )
-
     out_schema = "a long, b long, hamming int"
     if max_block_rows is None:
-        return _join_pairs(laid).dropDuplicates(["a", "b"])
+        return _band_self_join(laid, max_hamming, id_col).dropDuplicates(["a", "b"])
 
     # hot-band grid path — same shape as ann.py: sizes via a map-side
     # combinable count shuffle-joined back (never a window over the hot
@@ -708,7 +687,7 @@ def simhash_neardup_pairs_blocked(
     sizes = laid.groupBy("band_idx", "band").agg(F.count(F.lit(1)).alias("__cnt"))
     tagged = laid.join(sizes, ["band_idx", "band"])
     small = tagged.where(F.col("__cnt") <= max_block_rows).drop("__cnt")
-    small_pairs = _join_pairs(small)
+    small_pairs = _band_self_join(small, max_hamming, id_col)
 
     nblocks = (
         ((F.col("__cnt") - F.lit(1)) / F.lit(max_block_rows)).cast("int") + F.lit(1)

@@ -34,8 +34,10 @@ def token_frame(spark, tokens: dict[str, float]) -> DataFrame:
     Python-worker scan stage). Its plan is `Range (0, 1, splits=<cores>)`
     under a `Generate inline`, not a LocalRelation, and broadcasting it
     runs a Spark job (so does broadcasting a `VALUES` LocalRelation).
-    A query that only needs to restrict a frame to its tokens filters
-    with `token_in_sql` instead, which runs none."""
+    Used where the query weights join per-token stats (more_like_this
+    text, the SEISMIC probe and its explain). A query that only needs to
+    restrict a frame to its tokens filters with `token_in_sql` instead,
+    which runs none: every BM25 scorer does."""
     return spark.range(1).select(
         F.inline(
             F.array(

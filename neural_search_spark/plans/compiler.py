@@ -855,38 +855,17 @@ class Engine:
         if qtype == "terms_set":
             # OpenSearch terms_set: docs matching at least
             # `minimum_should_match` of the listed terms; score = sum
-            # of the matched terms' BM25 contributions. One postings
-            # join + one (doc) aggregate.
+            # of the matched terms' BM25 contributions. The scored
+            # postings filtered to the terms, one (doc) aggregate.
             terms = sorted({t.lower() for t in body["terms"]})
             msm = int(body.get("minimum_should_match", 1))
             idx = self.bm25_index()
-            n, avgdl = idx.stats
-            from ..operators.retrieval import token_frame
-
-            qf = token_frame(self.spark, dict.fromkeys(terms, 1.0)).select("token")
-            df_tbl = (
-                idx.postings.join(F.broadcast(qf), "token")
-                .groupBy("token")
-                .agg(F.count("*").cast("double").alias("df"))
-            )
-            k1, b_ = B.K1, B.B
-            idf = F.log(
-                F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            )
             scored = (
-                idx.postings.join(F.broadcast(qf), "token")
-                .join(F.broadcast(df_tbl), "token")
-                .join(idx.doclen, "doc_id")
-                .withColumn(
-                    "term_score",
-                    idf
-                    * (F.col("tf") * (k1 + 1.0))
-                    / (F.col("tf") + k1 * (1.0 - b_ + b_ * F.col("dl") / F.lit(avgdl))),
-                )
+                idx.scored.where(F.expr(R.token_in_sql(terms)))
                 .groupBy("doc_id")
                 .agg(
                     F.count("*").alias("__matched"),
-                    F.sum("term_score").alias("score"),
+                    F.expr(f"sum({B.term_score_sql(*idx.stats)})").alias("score"),
                 )
                 .where(F.col("__matched") >= msm)
                 .select("doc_id", "score")
@@ -1055,24 +1034,18 @@ class Engine:
             if not hasattr(self, "_combined_idx"):
                 from collections import OrderedDict
 
-                self._combined_idx: "OrderedDict[tuple, B.CombinedFieldsIndex]" = (
-                    OrderedDict()
-                )
+                self._combined_idx: "OrderedDict[tuple, B.BM25Index]" = OrderedDict()
             if ckey not in self._combined_idx:
                 # bounded artifact cache: distinct field-weight sets are
                 # few in practice, but a long-lived engine must not pin
                 # storage without limit — evict LRU and unpersist
                 while len(self._combined_idx) >= COMBINED_IDX_CACHE_CAP:
                     _, old = self._combined_idx.popitem(last=False)
-                    old.postings.unpersist()
-                    old.doclen.unpersist()
-                cidx = B.build_combined_fields(fields)
-                cidx.postings.persist()
-                cidx.doclen.persist()
-                self._combined_idx[ckey] = cidx
+                    old.scored.unpersist()
+                self._combined_idx[ckey] = B.build_combined_fields(fields)
             else:
                 self._combined_idx.move_to_end(ckey)
-            return B.combined_fields_topk(
+            return B.bm25_topk(
                 self._combined_idx[ckey], body["query"], k=k,
                 candidate_ids=candidate_ids,
             )
@@ -1269,44 +1242,19 @@ class Engine:
         """The `_explain` endpoint for a lexical match: per-token BM25
         scoring breakdown (tf, df, idf, dl, term_score) for one doc —
         the reference's Lucene explanation tree flattened to rows.
-        One broadcast-pruned scan of the postings index."""
-        idx = self.bm25_index(analyzer)
-        n, avgdl = idx.stats
-        if analyzer is None:
-            qtokens = sorted({t for t in query.lower().split() if t})
-        else:
-            from ..functions.analyzers import analyze_py
-
-            qtokens = sorted(set(analyze_py(query, analyzer)))
-        from ..operators.retrieval import token_frame
-
-        q = token_frame(self.spark, dict.fromkeys(qtokens, 1.0)).select("token")
-        df_tbl = (
-            idx.postings.join(F.broadcast(q), "token")
-            .groupBy("token")
-            .agg(F.count("*").cast("double").alias("df"))
-        )
-        idf = F.log(
-            F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        )
-        k1, b = B.K1, B.B
+        The scored postings filtered to the query's tokens and the doc."""
+        n, avgdl = self.bm25_index(analyzer).stats
         return (
-            idx.postings.where(F.col("doc_id") == int(doc_id))
-            .join(F.broadcast(q), "token")
-            .join(F.broadcast(df_tbl), "token")
-            .join(idx.doclen.where(F.col("doc_id") == int(doc_id)), "doc_id")
+            self.scored_postings(analyzer)
+            .where(F.expr(R.token_in_sql(B.query_tokens(query, analyzer))))
+            .where(F.col("doc_id") == int(doc_id))
             .select(
                 "token",
-                F.col("tf"),
-                F.col("df"),
-                F.round(idf, 4).alias("idf"),
-                F.col("dl"),
-                F.round(
-                    idf
-                    * (F.col("tf") * (k1 + 1.0))
-                    / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))),
-                    4,
-                ).alias("term_score"),
+                "tf",
+                "df",
+                F.expr(f"round({B.idf_sql(n)}, 4)").alias("idf"),
+                "dl",
+                F.expr(f"round({B.term_score_sql(n, avgdl)}, 4)").alias("term_score"),
             )
             .orderBy("token")
         )
@@ -1578,8 +1526,7 @@ class Engine:
         if hasattr(self, "_request_cache"):
             self._request_cache.clear()
         for cidx in getattr(self, "_combined_idx", {}).values():
-            cidx.postings.unpersist()
-            cidx.doclen.unpersist()
+            cidx.scored.unpersist()
         if hasattr(self, "_combined_idx"):
             self._combined_idx.clear()
 

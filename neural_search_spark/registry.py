@@ -10027,7 +10027,7 @@ def q_combined_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     """combined_fields: BM25F-style UNIFIED term statistics — tf and
     doc length merge across (text, title^2) with field weights BEFORE
     one BM25 pass, vs multi_match's per-field scoring
-    (bm25.py::combined_fields_topk)."""
+    (bm25.py::build_combined_fields, scored by bm25_topk)."""
     out = _agg_engine(spark, sf_dir).search(
         {"combined_fields": {"query": BM25_QUERY,
                              "fields": ["text", f"title^{CF_TITLE_W}"]}},
