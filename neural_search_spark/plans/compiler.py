@@ -34,7 +34,13 @@ Supported spec (dict keys):
                               approximate_threshold}}}
   {"match":         {field, query, k, analyzer, search_analyzer}}
   {"match_phrase":  {field, query, k}}
-  {"hybrid":        {queries: [spec...], pagination_depth}}
+  documents-scan leaves (`Engine._scan_leaf`, one filtered scan each):
+    term | terms | range | exists | constant_score | match_all |
+    match_none | ids | wildcard | prefix | regexp | terms_lookup |
+    rank_feature | distance_feature
+  {"hybrid":        {queries: [spec...], pagination_depth, filter}}
+                    `filter` is pushed into every sub-query before its
+                    top-k; scan leaves AND it into their scan predicate
   {"agentic":       {query_text}}
 pipeline:
   {"normalization": {technique, rank_constant},
@@ -508,10 +514,25 @@ class Engine:
         )
 
     # -- sub-query compilation --------------------------------------------
+    def _scan_leaf(
+        self, cond, score, k: int, hybrid_filter: str | None, by_score: bool = False
+    ) -> DataFrame:
+        """A documents-scan leaf: the docs where `cond` holds, scored by
+        the `score` column, top-`k` by doc_id (index order) or by score
+        desc, doc_id. A hybrid-level filter (P2) ANDs into the same
+        scan predicate, so it prunes before top-k without a second
+        documents scan."""
+        if hybrid_filter:
+            cond = cond & F.expr(hybrid_filter)
+        out = self.documents().where(cond).select("doc_id", score.alias("score"))
+        order = (F.col("score").desc(), "doc_id") if by_score else ("doc_id",)
+        return out.orderBy(*order).limit(k)
+
     def _compile_sub(
         self, spec: dict[str, Any], depth: int | None, hybrid_filter: str | None = None
     ) -> DataFrame:
         (qtype, body), = spec.items()
+        body = body or {}
         # generic leaf `boost` (OpenSearch: every query clause accepts
         # boost; score multiplies) — handled here once so every leaf
         # type composes; types that fold boost into their own formula
@@ -554,24 +575,21 @@ class Engine:
             # filter-context leaves as standalone queries (OpenSearch
             # accepts {"query": {"term": ...}} etc. at top level):
             # constant-score over the filtered scan
-            return self._compile_sub(
-                {"constant_score": {"filter": {qtype: body}}}, depth, hybrid_filter
+            return self._scan_leaf(
+                F.expr(compile_filter({qtype: body})), F.lit(1.0), k, hybrid_filter
             )
         if qtype == "constant_score":
-            # constant_score as a scored-bool/hybrid leg: filter-context
-            # match set, every hit scores `boost` (predicate pushes to
-            # the scan)
-            base = self.documents().where(F.expr(compile_filter(body["filter"])))
-            if candidate_ids is not None:
-                base = base.join(F.broadcast(candidate_ids), "doc_id", "semi")
-            return (
-                base.select(
-                    "doc_id",
-                    F.lit(float(body.get("boost", 1.0))).alias("score"),
-                )
-                .orderBy("doc_id")
-                .limit(k)
+            # filter-context match set, every hit scores `boost`
+            return self._scan_leaf(
+                F.expr(compile_filter(body["filter"])),
+                F.lit(float(body.get("boost", 1.0))), k, hybrid_filter,
             )
+        if qtype == "match_all":
+            # every doc, constant score (the generic leaf boost above
+            # scales it); doc_id order stands in for index order
+            return self._scan_leaf(F.lit(True), F.lit(1.0), k, hybrid_filter)
+        if qtype == "match_none":
+            return self._scan_leaf(F.lit(False), F.lit(0.0), k, hybrid_filter)
         if qtype == "neural":
             # Q9 enricher resolves the model id; inference goes through
             # the model REGISTRY (models.MODEL_REGISTRY), so swapping
@@ -600,18 +618,16 @@ class Engine:
             # corpus side must live in the query model's vector space
             # (stored column when dims agree, model re-embed otherwise)
             corp_base = self.model_corpus(model_id) if used_model else self.corpus()
+            corp = corp_base if flt is None else corp_base.where(flt)
             if body.get("max_distance") is not None:
                 return R.radial_search(
-                    corp_base, qv, max_distance=body["max_distance"]
+                    corp, qv, max_distance=body["max_distance"]
                 ).limit(k)
             if body.get("rescore"):
                 # kNN rescore context (`query/NeuralQueryBuilder.java:649-650`):
                 # cheap int-quantized phase 1 over the corpus, exact cosine
                 # only on the oversampled window
                 rs = body["rescore"] if isinstance(body["rescore"], dict) else {}
-                corp = corp_base
-                if flt is not None:
-                    corp = corp.where(flt)
                 return R.dense_rescore_topk(
                     corp, qv, k=k,
                     oversample=float(rs.get("oversample", 3.0)),
@@ -844,14 +860,7 @@ class Engine:
                 cond = F.col(field).like(pat)
             else:
                 cond = F.col(field).rlike(val)
-            base = self.documents().where(cond)
-            if candidate_ids is not None:
-                base = base.join(F.broadcast(candidate_ids), "doc_id", "semi")
-            return (
-                base.select("doc_id", F.lit(1.0).alias("score"))
-                .orderBy("doc_id")
-                .limit(k)
-            )
+            return self._scan_leaf(cond, F.lit(1.0), k, hybrid_filter)
         if qtype == "terms_set":
             # OpenSearch terms_set: docs matching at least
             # `minimum_should_match` of the listed terms; score = sum
@@ -860,9 +869,11 @@ class Engine:
             terms = sorted({t.lower() for t in body["terms"]})
             msm = int(body.get("minimum_should_match", 1))
             idx = self.bm25_index()
+            matched = idx.scored.where(F.expr(R.token_in_sql(terms)))
+            if candidate_ids is not None:
+                matched = matched.join(F.broadcast(candidate_ids), "doc_id", "semi")
             scored = (
-                idx.scored.where(F.expr(R.token_in_sql(terms)))
-                .groupBy("doc_id")
+                matched.groupBy("doc_id")
                 .agg(
                     F.count("*").alias("__matched"),
                     F.expr(f"sum({B.term_score_sql(*idx.stats)})").alias("score"),
@@ -1063,13 +1074,8 @@ class Engine:
             if row is None:
                 raise ValueError(f"terms_lookup doc {body['id']} not found")
             vals = row[0] if isinstance(row[0], list) else [row[0]]
-            base = self.documents().where(F.col(body["field"]).isin(vals))
-            if candidate_ids is not None:
-                base = base.join(F.broadcast(candidate_ids), "doc_id", "semi")
-            return (
-                base.select("doc_id", F.lit(1.0).alias("score"))
-                .orderBy("doc_id")
-                .limit(k)
+            return self._scan_leaf(
+                F.col(body["field"]).isin(vals), F.lit(1.0), k, hybrid_filter
             )
         if qtype == "rank_feature":
             # OpenSearch core rank_feature: score a numeric field
@@ -1088,13 +1094,8 @@ class Engine:
             else:
                 piv = float(body.get("saturation", {}).get("pivot", 1.0))
                 val = x / (x + F.lit(piv))
-            base = self.documents().where(x > 0)
-            if candidate_ids is not None:
-                base = base.join(F.broadcast(candidate_ids), "doc_id", "semi")
-            return (
-                base.select("doc_id", (F.lit(boost) * val).alias("score"))
-                .orderBy(F.col("score").desc(), "doc_id")
-                .limit(k)
+            return self._scan_leaf(
+                x > 0, F.lit(boost) * val, k, hybrid_filter, by_score=True
             )
         if qtype == "distance_feature":
             # OpenSearch core distance_feature: score decays with the
@@ -1107,25 +1108,16 @@ class Engine:
             pivot = float(body["pivot"])
             boost = float(body.get("boost", 1.0))
             x = F.col(field).cast("double")
-            base = self.documents().where(x.isNotNull())
-            if candidate_ids is not None:
-                base = base.join(F.broadcast(candidate_ids), "doc_id", "semi")
             score = F.lit(boost) * F.lit(pivot) / (
                 F.lit(pivot) + F.abs(x - F.lit(origin))
             )
-            return (
-                base.select("doc_id", score.alias("score"))
-                .orderBy(F.col("score").desc(), "doc_id")
-                .limit(k)
+            return self._scan_leaf(
+                x.isNotNull(), score, k, hybrid_filter, by_score=True
             )
         if qtype == "ids":
             vals = [int(v) for v in body["values"]]
-            return (
-                self.documents()
-                .where(F.col("doc_id").isin(vals))
-                .select("doc_id", F.lit(1.0).alias("score"))
-                .orderBy("doc_id")
-                .limit(k)
+            return self._scan_leaf(
+                F.col("doc_id").isin(vals), F.lit(1.0), k, hybrid_filter
             )
         raise ValueError(f"unsupported query type: {qtype}")
 
@@ -2606,6 +2598,8 @@ class Engine:
         # re-selects `size` (`processor/mmr/MMRNeuralQueryTransformer.java:40-110`)
         mmr = pipeline.get("mmr")
         mmr_cand = int(mmr.get("candidates", 3 * size)) if mmr else None
+        # rows a ranked result keeps: the page, or the MMR pool if larger
+        keep = max(size, mmr_cand or 0)
         if mmr:
             self._evt("mmr_neural_query_transformer")
 
@@ -2795,12 +2789,9 @@ class Engine:
                     F.expr(" AND ".join(clauses))
                 ).select("doc_id")
                 base = base.join(allowed, "doc_id", "left_semi")
-            result = base.orderBy(F.col("score").desc(), "doc_id")
-            if from_:
-                result = result.offset(from_)
             # keep the MMR over-fetch window alive (the shared mmr
             # stage below re-selects `size` diversified rows)
-            result = result.limit(max(size, mmr_cand or 0))
+            result = _page(base.orderBy(F.col("score").desc(), "doc_id"), from_, keep)
         elif qtype == "function_score":
             # function_score wrapper (OpenSearch core semantics; the
             # reference forwards such clauses opaquely,
@@ -2946,10 +2937,7 @@ class Engine:
                 result = result.where(
                     F.col("score") >= F.lit(float(body["min_score"]))
                 )
-            result = result.orderBy(F.col("score").desc(), "doc_id")
-            if from_:
-                result = result.offset(from_)
-            result = result.limit(size)
+            result = _page(result.orderBy(F.col("score").desc(), "doc_id"), from_, keep)
         elif qtype == "pinned":
             # OpenSearch pinned query: the listed ids rank first (in
             # list order), organic results follow with pinned ids
@@ -2979,48 +2967,7 @@ class Engine:
                 .orderBy("__org", F.col("score").desc(), "doc_id")
                 .drop("__org")
             )
-            if from_:
-                result = result.offset(from_)
-            result = result.limit(max(size, mmr_cand or 0))
-        elif qtype == "constant_score":
-            # OpenSearch core constant_score: filter-context match set,
-            # every hit scores `boost`. Pure predicate pushdown — the
-            # filter reaches the parquet scan; deterministic doc_id
-            # order stands in for index order.
-            boost = float(body.get("boost", 1.0))
-            result = (
-                self.documents()
-                .where(F.expr(compile_filter(body["filter"])))
-                .select("doc_id", F.lit(boost).alias("score"))
-                .orderBy("doc_id")
-            )
-            if from_:
-                result = result.offset(from_)
-            result = result.limit(max(size, mmr_cand or 0))
-        elif qtype == "match_all":
-            # OpenSearch core match_all: every doc, constant score
-            # `boost` (default 1.0); deterministic doc_id order stands
-            # in for index order. Pure scan + TakeOrdered — at 100 TB
-            # the offset/limit window is what the driver reads, not
-            # the corpus.
-            boost = float((body or {}).get("boost", 1.0))
-            result = (
-                self.documents()
-                .select("doc_id", F.lit(boost).alias("score"))
-                .orderBy("doc_id")
-            )
-            if from_:
-                result = result.offset(from_)
-            result = result.limit(max(size, mmr_cand or 0))
-        elif qtype == "match_none":
-            # OpenSearch core match_none: the empty result with the
-            # standard (doc_id, score) schema
-            result = (
-                self.documents()
-                .select("doc_id", F.lit(0.0).alias("score"))
-                .where(F.lit(False))
-                .limit(size)
-            )
+            result = _page(result, from_, keep)
         elif qtype == "dis_max":
             # OpenSearch core dis_max: per-doc score = best sub-query
             # score + tie_breaker × (sum of the others). Sub-queries
@@ -3047,9 +2994,7 @@ class Engine:
                 )
                 .orderBy(F.col("score").desc(), "doc_id")
             )
-            if from_:
-                result = result.offset(from_)
-            result = result.limit(max(size, mmr_cand or 0))
+            result = _page(result, from_, keep)
         elif qtype == "boosting":
             # OpenSearch core boosting query: positive hits whose doc
             # ALSO matches `negative` are demoted by `negative_boost`.
@@ -3076,9 +3021,7 @@ class Engine:
                 )
                 .orderBy(F.col("score").desc(), "doc_id")
             )
-            if from_:
-                result = result.offset(from_)
-            result = result.limit(max(size, mmr_cand or 0))
+            result = _page(result, from_, keep)
         elif qtype == "script_score":
             # OpenSearch core script_score with the script expressed in
             # Spark SQL (this engine's "painless"): rescore the inner
@@ -3116,9 +3059,7 @@ class Engine:
                 )
                 .orderBy(F.col("score").desc(), "doc_id")
             )
-            if from_:
-                result = result.offset(from_)
-            result = result.limit(max(size, mmr_cand or 0))
+            result = _page(result, from_, keep)
         elif qtype == "hybrid":
             subs_spec = body["queries"]
             depth = body.get("pagination_depth", from_ + size)
@@ -3225,7 +3166,7 @@ class Engine:
                     pipeline["collapse"]["field"],
                     k=size,
                 )
-            result = result.limit(max(size, mmr_cand or 0))
+            result = result.limit(keep)
 
         if mmr:
             picked = RR.mmr_diversify(
@@ -3272,6 +3213,14 @@ class Engine:
                 F.col("score").desc(), F.col("doc_id")
             )
         return result
+
+
+def _page(result: DataFrame, from_: int, n: int) -> DataFrame:
+    """The paging tail of a compound query: skip `from_` ranked rows,
+    keep `n` (the page size, or the MMR candidate pool when larger)."""
+    if from_:
+        result = result.offset(from_)
+    return result.limit(n)
 
 
 def _strip_two_phase(query):

@@ -15,9 +15,6 @@ them the missing durability half of the lifecycle:
                      Hive-metastore deployment the bucketBy variant in
                      layout.py is the same layout as a managed table)
     doclen/          (doc_id, dl)
-    ivf/             embeddings + cluster_id, PARTITIONED BY cluster_id
-                     → probe filters prune directories before any file
-                     is opened
     pq_codes/        (vec_id, codes array<int>) — the 8-byte scan tier
     meta.json        scalar artifacts: BM25 (N, avgdl), IVF centroids,
                      PQ codebooks, BPE merges, analyzer name
@@ -52,7 +49,6 @@ class IndexBundle:
     stats: tuple[int, float]  # (N, avgdl)
     analyzer: str | None
     centroids: list[tuple[int, list[float]]]  # IVF coarse quantizer
-    ivf_assigned: DataFrame | None  # embeddings + cluster_id
     pq_codebooks: list[list[list[float]]] | None
     pq_codes: DataFrame | None  # (vec_id, codes)
     bpe_merges: list[str]
@@ -177,19 +173,12 @@ def save_index(
     if chunk_stats is not None:
         meta["chunk_n_docs"] = chunk_stats[0]
         meta["chunk_avgdl"] = chunk_stats[1]
-    if embs is not None and ivf_centroids:
-        from ..operators import ann as ANN
+    if embs is not None and pq_codebooks:
+        from ..operators import pq as PQ
 
-        assigned = embs.join(ANN.ivf_assign(embs, ivf_centroids), "vec_id")
-        assigned.write.partitionBy("cluster_id").mode("overwrite").parquet(
-            os.path.join(path, "ivf")
+        PQ.encode_pq(embs, pq_codebooks).write.mode("overwrite").parquet(
+            os.path.join(path, "pq_codes")
         )
-        if pq_codebooks:
-            from ..operators import pq as PQ
-
-            PQ.encode_pq(embs, pq_codebooks).write.mode("overwrite").parquet(
-                os.path.join(path, "pq_codes")
-            )
     if seismic is not None:
         # SEISMIC sparse-ANN index (S4/S5): the clustered postings are
         # partitioned by token's first byte-bucket via repartition on
@@ -216,7 +205,6 @@ def load_index(spark: SparkSession, path: str) -> IndexBundle:
         p = os.path.join(path, sub)
         return spark.read.parquet(p) if os.path.isdir(p) else None
 
-    ivf = _maybe("ivf")
     codes = _maybe("pq_codes")
     seismic = None
     sp = _maybe("seismic_postings")
@@ -246,7 +234,6 @@ def load_index(spark: SparkSession, path: str) -> IndexBundle:
         stats=(int(meta["n_docs"]), float(meta["avgdl"])),
         analyzer=meta.get("analyzer"),
         centroids=[(int(c), [float(x) for x in v]) for c, v in meta["centroids"]],
-        ivf_assigned=ivf,
         pq_codebooks=meta.get("pq_codebooks"),
         pq_codes=codes,
         bpe_merges=list(meta.get("bpe_merges", [])),

@@ -87,18 +87,14 @@ def test_meta_scalars_roundtrip(spark, store):
     assert b.stats[0] > 0 and b.stats[1] > 0
     assert b.bpe_merges == registry._bpe_merges(spark, SF_SMOKE)
     assert len(b.centroids) == registry.IVF_NUM_CENTROIDS
-    assert b.ivf_assigned is not None and b.pq_codes is not None
-    # the ivf table is partitioned by cluster_id: a probe filter must
-    # prune partitions at the source
-    pruned = b.ivf_assigned.where("cluster_id = 3")
-    assert pruned.count() < b.ivf_assigned.count()
+    assert b.pq_codes is not None
 
 
 def test_docs_only_index(spark, tmp_path):
     docs = catalog.table(spark, SF_SMOKE, "documents")
     IS.save_index(spark, docs, None, str(tmp_path))
     b = IS.load_index(spark, str(tmp_path))
-    assert b.ivf_assigned is None and b.pq_codes is None
+    assert b.pq_codes is None
     assert b.postings.count() > 0
 
 

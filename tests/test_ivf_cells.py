@@ -142,7 +142,7 @@ def test_attach_index_replaces_cells_of_other_centroids(spark):
     bm25 = first.bm25_index()
     bundle = IS.IndexBundle(
         postings=bm25.postings, doclen=bm25.doclen, stats=bm25.stats,
-        analyzer=None, ivf_assigned=None, pq_codebooks=None, pq_codes=None,
+        analyzer=None, pq_codebooks=None, pq_codes=None,
         bpe_merges=[],
         centroids=[(i, catalog.query_vector(spark, SF_SMOKE, v)) for i, v in enumerate(ids)],
     )
